@@ -9,7 +9,8 @@ job group.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+import statistics
+from dataclasses import dataclass, field, fields
 
 GROUP_KEY = "spark.jobGroup.id"
 
@@ -33,11 +34,9 @@ class GroupStats:
     task_ms: dict[int, list[float]] = field(default_factory=dict)
 
     def add(self, other: "GroupStats") -> None:
-        for k in ("jobs", "stages", "tasks", "run_ms", "cpu_ms", "deser_ms",
-                  "gc_ms", "python_ms", "shuffle_read_bytes",
-                  "shuffle_write_bytes", "spill_bytes", "input_bytes",
-                  "output_bytes"):
-            setattr(self, k, getattr(self, k) + getattr(other, k))
+        for f in fields(self):
+            if f.name != "task_ms":
+                setattr(self, f.name, getattr(self, f.name) + getattr(other, f.name))
         for st, d in other.task_ms.items():
             self.task_ms.setdefault(st, []).extend(d)
 
@@ -50,9 +49,9 @@ class GroupStats:
         (the stage whose balance decides the wall time); 0 without tasks."""
         if not self.task_ms:
             return 0.0
-        d = sorted(max(self.task_ms.values(), key=sum))
-        med = d[len(d) // 2] if len(d) % 2 else (d[len(d) // 2 - 1] + d[len(d) // 2]) / 2
-        return d[-1] / med if med > 0 else 0.0
+        d = max(self.task_ms.values(), key=sum)
+        med = statistics.median(d)
+        return max(d) / med if med > 0 else 0.0
 
 
 def _group(props: dict | None) -> str | None:

@@ -40,8 +40,9 @@ class BenchSession:
             .config("spark.ui.enabled", "false")
             .config("spark.ui.showConsoleProgress", "false")
             .config("spark.sql.warehouse.dir", os.path.join(work_dir, "warehouse"))
+            # -XX:-UsePerfData: no hsperfdata file in the system temp dir
             .config("spark.driver.extraJavaOptions",
-                    f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}")
+                    f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp} -XX:-UsePerfData")
         )
         if event_log_dir is not None:
             os.makedirs(event_log_dir, exist_ok=True)

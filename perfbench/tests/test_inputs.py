@@ -51,4 +51,5 @@ def test_series_lengths_are_stratified_and_keyed_independently_of_the_seed():
     assert np.array_equal(cells(4), cells(4), equal_nan=True)
     assert not np.array_equal(cells(4), cells(5), equal_nan=True)
     assert lengths(4) == lengths(5)
-    assert min(lengths(4)) >= 48 and max(lengths(4)) <= 480 and max(lengths(4)) >= 8 * min(lengths(4))
+    lo, hi = min(lengths(4)), max(lengths(4))
+    assert 48 <= lo and hi <= 480 and hi >= 8 * lo
