@@ -2,7 +2,7 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload ts_prep --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload ts_prep_fit --seed 1 --seconds 15 --trace 0
 
 See ``perfbench/README.md`` for the workloads and metrics.
 """

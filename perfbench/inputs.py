@@ -147,6 +147,11 @@ def documents_table(
 
 # -- dense series ------------------------------------------------------------
 
+def series_lengths(n_series: int, lo: int, hi: int) -> np.ndarray:
+    """The series lengths of ``series_table``, the same for every seed."""
+    return stratified(n_series, lo, hi, np.random.default_rng(0)).astype(np.int64)
+
+
 def series_table(seed: int, n_series: int, lo: int, hi: int) -> pa.Table:
     """Series layout ``(key, series ARRAY<double>)`` on the hourly January
     index (744 instants). Series lengths are stratified between ``lo`` and
@@ -156,7 +161,7 @@ def series_table(seed: int, n_series: int, lo: int, hi: int) -> pa.Table:
     partition's load, and with it the wall time, from seed to seed. Values
     are a GARCH(1,1)-like return process on a level with a daily cycle, so
     every model in the workload has something to fit."""
-    lengths = stratified(n_series, lo, hi, np.random.default_rng(0)).astype(np.int64)
+    lengths = series_lengths(n_series, lo, hi)
     rng = np.random.default_rng([seed, 3])
     rows = []
     for n in lengths:

@@ -3,8 +3,10 @@
 ``END_TO_END`` and ``PER_LAYER`` are the names the benchmark prints, with
 their units; ``BENCHMARK.json`` lists the same names (a test holds the two
 in step). Every per-layer metric is printed on every workload: a layer a
-workload does not exercise reads 0. Times and counts are per request of the
-traced loop unless the name says otherwise.
+workload does not exercise reads 0. A layer's times and counts are per
+request of the traced loop that runs the layer (a workload whose rotation
+mixes kinds of request runs some layers in only some of them); ``spark.*``
+is per request of the traced loop.
 """
 
 from __future__ import annotations
@@ -103,20 +105,25 @@ def layer_table(
     def layer(name):
         return [s for s in loop if s.layer == name]
 
+    def requests(ss):
+        """How many requests the spans ``ss`` belong to (at least 1)."""
+        return max(len({s.request for s in ss}), 1)
+
     src = layer("sources")
-    out["sources.call_s"] = sum(selft[s.id] for s in src) / n
-    out["sources.jobs"] = stats_of(src).jobs / n
+    n_src = requests(src)
+    out["sources.call_s"] = sum(selft[s.id] for s in src) / n_src
+    out["sources.jobs"] = stats_of(src).jobs / n_src
     total = stats_of(loop)
-    out["sources.bytes_read"] = total.input_bytes / n
-    out["sources.bytes_written"] = total.output_bytes / n
+    out["sources.bytes_read"] = total.input_bytes / n_src
+    out["sources.bytes_written"] = total.output_bytes / n_src
 
     for name in ("operators", "pipeline"):
         ss = layer(name)
         build = [s for s in ss if not s.is_action]
         act = [s for s in ss if s.is_action]
-        out[f"{name}.build_s"] = sum(selft[s.id] for s in build) / n
-        out[f"{name}.eager_jobs"] = stats_of(build).jobs / n
-        out[f"{name}.action_s"] = sum(s.seconds for s in act) / n
+        out[f"{name}.build_s"] = sum(selft[s.id] for s in build) / requests(ss)
+        out[f"{name}.eager_jobs"] = stats_of(build).jobs / requests(ss)
+        out[f"{name}.action_s"] = sum(s.seconds for s in act) / requests(ss)
     ops = layer("operators")
     ops_stats = stats_of(ops)
     ops_wall = sum(s.seconds for s in ops if s.parent is None)
@@ -127,21 +134,21 @@ def layer_table(
         if act:
             out[f"models.{m}.action_s"] = sum(s.seconds for s in act) / len(act)
     ms = stats_of(mod)
-    out["models.python_ms"] = ms.python_ms / n
-    out["models.jvm_cpu_ms"] = ms.cpu_ms / n
+    out["models.python_ms"] = ms.python_ms / requests(mod)
+    out["models.jvm_cpu_ms"] = ms.cpu_ms / requests(mod)
     mod_act = [s for s in mod if s.is_action]
     eng = _engine(ms, sum(s.seconds for s in mod_act), cores)
     if mod_act:
         eng["max_task_over_median"] = sum(
             groups.get(s.group, none).max_over_median() for s in mod_act
         ) / len(mod_act)
-    eng["tasks"] /= n
+    eng["tasks"] /= requests(mod)
     for k, v in eng.items():
         out[f"models.{k}"] = v
 
     # a workload whose operator plans run inside another layer's action
     # (ts_prep) names the span that executed the operator chain on its own
-    n_ops = n
+    n_ops = requests(ops)
     engine_span = dict(extras).get(OPERATORS_ENGINE_SPAN)
     if engine_span:
         sp = [s for s in spans if s.name == engine_span]

@@ -3,16 +3,17 @@
 
 Usage, from the repository root::
 
-    python3 perfbench/run.py --workload ts_prep --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload ts_prep_fit --seed 1 --seconds 15 --trace 0
 
-One client runs requests in a closed loop on ``local[nproc]`` until the
-requests have taken ``--seconds`` seconds, checking every output outside
-the timed region. ``--trace 0`` prints the end-to-end metrics; ``--trace 1``
-runs the same untraced loop, then a traced loop with job groups and the
-event log on, and prints the per-layer table instead. The last line of
-standard output is ``{"correct", "attempted", "failed", "metrics"}``;
-diagnostics go to standard error. Everything the run writes stays under
-``.perfbench-work/`` in the repository root.
+One client runs requests in a closed loop on ``local[nproc]``, after the
+workload's warm-up rotations, until the requests have taken ``--seconds``
+seconds, checking every output outside the timed region. ``--trace 0``
+prints the end-to-end metrics; ``--trace 1`` runs the same untraced loop,
+then a traced loop with job groups on, both with the event log on, and
+prints the per-layer table instead. The last line of standard output is
+``{"correct", "attempted", "failed", "metrics"}``; diagnostics go to
+standard error. Everything the run writes stays under ``.perfbench-work/``
+in the repository root.
 """
 
 from __future__ import annotations
@@ -30,6 +31,9 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench-work")
 SETUPS = 3
+
+sys.path.insert(0, ROOT)
+from perfbench import stats  # noqa: E402
 
 
 def log(msg: str) -> None:
@@ -87,34 +91,54 @@ class RssSampler:
 class LoopResult:
     def __init__(self):
         self.latencies: list[float] = []
+        #: request name → latencies of its correct requests, and its items
+        self.by_name: dict[str, list[float]] = {}
+        self.items_of: dict[str, int] = {}
         self.items = 0
         self.attempted = 0
         self.failed = 0
 
-    def record(self, seconds: float, items: int, problems: list[str]) -> None:
+    def record(self, name: str, seconds: float, items: int,
+               problems: list[str]) -> None:
         """Count one request; a request with problems is a failed one."""
         self.attempted += 1
         if problems:
             self.failed += 1
         else:
             self.latencies.append(seconds)
+            self.by_name.setdefault(name, []).append(seconds)
+            self.items_of[name] = items
             self.items += items
 
     @property
-    def busy(self) -> float:
-        return sum(self.latencies)
-
-    @property
     def items_per_s(self) -> float:
-        return self.items / self.busy if self.busy > 0 else 0.0
+        """The items of one request of each kind over the sum of each
+        kind's median latency: the throughput of a rotation made of median
+        requests, so one slow request moves it no more than it moves the
+        median."""
+        busy = sum(stats.median(v) for v in self.by_name.values())
+        return sum(self.items_of.values()) / busy if busy > 0 else 0.0
 
 
-def warm_up(wl, ctx, whole: bool) -> None:
-    """A whole rotation, or only its first request; untimed and unchecked."""
-    reqs = wl.rotation()
-    for req in reqs if whole else reqs[:1]:
-        req.run(ctx)
-        wl.after_request(ctx)
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the machine so far, from /proc/stat: the
+    share of steal during a loop says how much the host took away."""
+    try:
+        with open("/proc/stat") as f:
+            vals = [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (vals[7] if len(vals) > 7 else 0), sum(vals)
+
+
+def warm_up(wl, ctx, rotations: int) -> None:
+    """Whole rotations, or with ``rotations`` 0 only the first request of
+    one; untimed and unchecked."""
+    for _ in range(max(rotations, 1)):
+        reqs = wl.rotation()
+        for req in reqs if rotations else reqs[:1]:
+            req.run(ctx)
+            wl.after_request(ctx)
 
 
 def timed_loop(wl, ctx, seconds: float) -> LoopResult:
@@ -143,7 +167,7 @@ def timed_loop(wl, ctx, seconds: float) -> LoopResult:
                 problems = [f"raised {type(err).__name__}: {err}"]
             for p in problems:
                 log(f"{wl.name}/{req.name}: {p}")
-            res.record(dt, req.items, problems)
+            res.record(req.name, dt, req.items, problems)
             wl.after_request(ctx)
     return res
 
@@ -156,7 +180,6 @@ def main(argv=None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
-    sys.path.insert(0, ROOT)
     # the Python workers Spark forks import the library too
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
@@ -168,7 +191,6 @@ def main(argv=None) -> int:
         log(f"the library is not importable from {ROOT}: {e}")
         return 2
 
-    from perfbench import stats
     from perfbench.eventlog import read_groups
     from perfbench.layers import END_TO_END, PER_LAYER, layer_table
     from perfbench.session import BenchSession
@@ -184,16 +206,20 @@ def main(argv=None) -> int:
     sess = None
     try:
         # set up SETUPS times on one live session. Each set-up generates the
-        # inputs; the first also starts the session and warms it up with a
-        # whole rotation (every plan compiled, the JIT and the Python workers
-        # warm on full-size data), the later ones with the first request
+        # inputs; the first also starts the session and runs the workload's
+        # warm-up rotations (every plan compiled, the JIT past its ramp, the
+        # Python workers started), the later ones the first request of a
+        # rotation. A traced run keeps the event log on from the start, so
+        # its untraced and traced loops share one warm session.
+        elog = os.path.join(run_dir, "eventlog") if args.trace else None
         setups = []
         for i in range(SETUPS):
             t0 = time.perf_counter()
             if sess is None:
-                sess = BenchSession(run_dir)
+                sess = BenchSession(run_dir, event_log_dir=elog)
             wl.generate()
-            warm_up(wl, Ctx(sess.spark, Tracer(False), sess.cores), whole=i == 0)
+            warm_up(wl, Ctx(sess.spark, Tracer(False), sess.cores),
+                    wl.WARM_ROTATIONS if i == 0 else 0)
             setups.append(time.perf_counter() - t0)
         wl.prepare_checks()
         log(f"{wl.name} gates: {json.dumps(wl.gates())}")
@@ -202,8 +228,10 @@ def main(argv=None) -> int:
         # memory does not repeat within a tenth from run to run, so it is
         # sampled (during the untraced loop) only for the traced table
         rss = RssSampler(sess.jvm_pid()) if args.trace else contextlib.nullcontext()
+        ticks0 = cpu_ticks()
         with rss:
             plain = timed_loop(wl, ctx, args.seconds)
+        steal = [b - a for a, b in zip(ticks0, cpu_ticks())]
         lat_ms = [x * 1000 for x in plain.latencies] or [0.0]
         tail = stats.tail(lat_ms)
         log(f"{wl.name}: {plain.attempted} requests, {plain.failed} failed, "
@@ -212,7 +240,8 @@ def main(argv=None) -> int:
             + (f", p{tail[0]:.1f} {tail[1]:.1f} ms" if tail else
                f", no tail percentile with {stats.MIN_BEYOND} samples beyond")
             + f" (n={len(lat_ms)}); latencies {[round(x) for x in lat_ms]} ms;"
-            f" setups {[round(s, 3) for s in setups]} s")
+            f" setups {[round(s, 3) for s in setups]} s;"
+            f" steal {steal[0] / max(steal[1], 1):.1%} of CPU time in the loop")
         attempted, failed = plain.attempted, plain.failed
 
         if not args.trace:
@@ -223,10 +252,6 @@ def main(argv=None) -> int:
             }
             units = END_TO_END
         else:
-            sess.spark.stop()
-            elog = os.path.join(run_dir, "eventlog")
-            sess = BenchSession(run_dir, event_log_dir=elog)
-            warm_up(wl, Ctx(sess.spark, Tracer(False), sess.cores), whole=True)
             tracer = Tracer(True, set_group=sess.set_group)
             tctx = Ctx(sess.spark, tracer, sess.cores)
             traced = timed_loop(wl, tctx, args.seconds)
@@ -243,7 +268,8 @@ def main(argv=None) -> int:
             attempted += traced.attempted
             failed += traced.failed
             c = tctx.counters
-            values["models.fit_failures"] = c.get("fit_failures", 0) / max(len(walls), 1)
+            values["models.fit_failures"] = (
+                c.get("fit_failures", 0) / max(c.get("fit_requests", 0), 1))
             fits = c.get("fit_series", 0) + ctx.counters.get("fit_series", 0)
             bad = c.get("fit_failures", 0) + ctx.counters.get("fit_failures", 0)
             values["fit_fail_ratio"] = bad / fits if fits else 0.0

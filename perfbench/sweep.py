@@ -3,7 +3,7 @@
 
 Usage, from the repository root::
 
-    python3 perfbench/sweep.py runs.jsonl --seeds 1-10 [--workloads ts_prep,...]
+    python3 perfbench/sweep.py runs.jsonl --seeds 1-10 [--workloads ts_prep_fit,...]
 
 Each run appends ``{"workload", "seed", "wall_s", "result"}`` to the output
 file (``result`` is the JSON line ``run.py`` printed, or null if it printed

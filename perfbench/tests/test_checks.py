@@ -79,10 +79,19 @@ def test_union_find_takes_the_min_id():
 
 def test_failed_checks_count_in_the_fail_ratio():
     r = LoopResult()
-    r.record(0.5, 10, [])
-    r.record(0.7, 10, ["col x: 1 mismatches"])
+    r.record("fit", 0.5, 10, [])
+    r.record("fit", 0.7, 10, ["col x: 1 mismatches"])
     assert (r.attempted, r.failed, r.items) == (2, 1, 10)
     assert r.items_per_s == 20.0
+
+
+def test_items_per_s_is_a_rotation_of_median_requests():
+    r = LoopResult()
+    for s in (1.0, 1.2, 9.0):  # one stalled prep moves the median, not the mean
+        r.record("prep", s, 100, [])
+    for s in (0.4, 0.6):
+        r.record("fit", s, 50, [])
+    assert r.items_per_s == (100 + 50) / (1.2 + 0.5)
 
 
 class _Corrupting:

@@ -27,15 +27,17 @@ def test_layer_table_from_two_requests():
     }
     t = layer_table(spans, walls, groups, cores=4, extras=[])
     assert set(t) == set(PER_LAYER)
-    assert t["sources.call_s"] == pytest.approx(0.05)
-    assert t["sources.bytes_read"] == 500
+    # layer metrics are per request that runs the layer: sources and models
+    # run in request 0 only, operators in request 1 only
+    assert t["sources.call_s"] == pytest.approx(0.1)
+    assert t["sources.bytes_read"] == 1000
     assert t["models.garch.action_s"] == pytest.approx(1.0)
-    assert t["models.python_ms"] == 450
+    assert t["models.python_ms"] == 900
     assert t["models.core_busy"] == pytest.approx(4.0 / (1.0 * 4))
-    assert t["operators.eager_jobs"] == 1.0   # 2 eager jobs over 2 requests
-    assert t["operators.build_s"] == pytest.approx(0.25)
-    assert t["operators.action_s"] == pytest.approx(0.25)
-    assert t["operators.tasks"] == 1.5
+    assert t["operators.eager_jobs"] == 2.0
+    assert t["operators.build_s"] == pytest.approx(0.5)
+    assert t["operators.action_s"] == pytest.approx(0.5)
+    assert t["operators.tasks"] == 3.0
     assert t["spark.jobs"] == 2.0
     build, action = 0.1 + 0.2 + 0.5, 1.0 + 0.5
     assert t["spark.build_share"] == pytest.approx(build / (build + action))

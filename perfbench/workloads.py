@@ -46,6 +46,9 @@ class Workload:
     name = ""
     #: what the items of ``items_per_s`` are on this workload
     items = ""
+    #: rotations run after the session starts, before anything is timed:
+    #: enough for the JIT to finish compiling the hot paths of every request
+    WARM_ROTATIONS = 1
 
     def __init__(self, seed: int, work_dir: str):
         self.seed = seed
@@ -82,8 +85,9 @@ class TsPrep(Workload):
 
     name = "ts_prep"
     items = "input observations"
-    N_KEYS = 120
-    N_OBS = 8_000
+    WARM_ROTATIONS = 12
+    N_KEYS = 30
+    N_OBS = 2_000
     #: largest per-key event count ÷ smallest
     SPREAD = 20.0
 
@@ -119,22 +123,18 @@ class TsPrep(Workload):
         self.ref = checks.ts_prep_reference(self.events.to_pandas())
 
     def rotation(self):
-        """Two requests, one per output directory: a whole-rotation warm-up
-        then runs the chain twice, and a timed run measures at least two
-        requests."""
         from spark_timeseries_spark.sources import serde
 
-        def request(out):
-            def run(ctx):
-                rolled = self._chain(ctx)[-1]
-                with ctx.tracer.span("sources.save_parquet.action"):
-                    serde.save_parquet(rolled, self.index, out)
-                return out
+        out = os.path.join(self.dir, "out", "series")
 
-            return Request("ts_prep", self.N_OBS, run,
-                           lambda ctx, o: checks.check_ts_prep(o, self.ref))
+        def run(ctx):
+            rolled = self._chain(ctx)[-1]
+            with ctx.tracer.span("sources.save_parquet.action"):
+                serde.save_parquet(rolled, self.index, out)
+            return out
 
-        return [request(os.path.join(self.dir, "out", f"r{i}")) for i in (0, 1)]
+        return [Request("ts_prep", self.N_OBS, run,
+                        lambda ctx, o: checks.check_ts_prep(o, self.ref))]
 
     def gates(self):
         from spark_timeseries_spark.operators.resample import MAP_GRID_MAX_INSTANTS
@@ -184,7 +184,8 @@ class ModelFit(Workload):
     and one test_series_suite (adf, kpss, ljung_box) per rotation."""
 
     name = "model_fit"
-    items = "series fitted or tested"
+    items = "series observations fitted or tested"
+    WARM_ROTATIONS = 6
     N_SERIES = 48
     LEN_LO, LEN_HI = 48, 480
     MODELS = (
@@ -199,6 +200,10 @@ class ModelFit(Workload):
     @property
     def path(self):
         return os.path.join(self.dir, "series.parquet")
+
+    @property
+    def n_obs(self) -> int:
+        return int(inputs.series_lengths(self.N_SERIES, self.LEN_LO, self.LEN_HI).sum())
 
     def generate(self):
         import spark_timeseries_spark as sts
@@ -232,25 +237,60 @@ class ModelFit(Workload):
 
     def _check_fit(self, ctx, out):
         bad = int((~out["ok"].astype(bool)).sum()) + (self.N_SERIES - len(out))
+        ctx.count("fit_requests")
         ctx.count("fit_series", self.N_SERIES)
         ctx.count("fit_failures", bad)
         return checks.check_certificate(out, self.cert)
 
     def rotation(self):
         reqs = [
-            Request(model, self.N_SERIES,
+            Request(model, self.n_obs,
                     lambda ctx, m=model, kw=kw: self._call(ctx, m, kw),
                     self._check_fit)
             for model, kw in self.MODELS
         ]
         reqs.append(Request(
-            "tests", self.N_SERIES, lambda ctx: self._call(ctx, "tests", {}),
+            "tests", self.n_obs, lambda ctx: self._call(ctx, "tests", {}),
             lambda ctx, out: checks.check_tests(out, self.adf)))
         return reqs
 
     def gates(self):
         return {"series": self.N_SERIES, "length_range": [self.LEN_LO, self.LEN_HI],
-                "index_instants": inputs.HOURS}
+                "observations": self.n_obs, "index_instants": inputs.HOURS}
+
+
+# ---------------------------------------------------------------------------
+
+class TsPrepFit(Workload):
+    """The time-series half of the library in one rotation: one ``ts_prep``
+    request (events to series parquet), then ``model_fit``'s four fits and
+    one test suite over a series table of widely varied lengths."""
+
+    name = "ts_prep_fit"
+    items = "observations: input events of a prep, series observations of a fit"
+    WARM_ROTATIONS = 1
+
+    def __init__(self, seed, work_dir):
+        super().__init__(seed, work_dir)
+        self.prep = TsPrep(seed, self.dir)
+        self.fit = ModelFit(seed, self.dir)
+
+    def generate(self):
+        self.prep.generate()
+        self.fit.generate()
+
+    def prepare_checks(self):
+        self.prep.prepare_checks()
+        self.fit.prepare_checks()
+
+    def rotation(self):
+        return self.prep.rotation() + self.fit.rotation()
+
+    def gates(self):
+        return {"ts_prep": self.prep.gates(), "model_fit": self.fit.gates()}
+
+    def traced_extras(self, ctx):
+        return self.prep.traced_extras(ctx)
 
 
 # ---------------------------------------------------------------------------
@@ -262,8 +302,9 @@ class CorpusDedup(Workload):
 
     name = "corpus_dedup"
     items = "documents"
-    N_DOCS = 10_000
-    N_CLUSTERS = 625
+    WARM_ROTATIONS = 3
+    N_DOCS = 2_000
+    N_CLUSTERS = 125
     CLUSTER_SIZE = 4
     THRESHOLD = 0.5
 
@@ -405,4 +446,4 @@ class SmallCalls(Workload):
                 "documents": self.N_DOCS, "daily_instants": 31}
 
 
-WORKLOADS = {w.name: w for w in (TsPrep, ModelFit, CorpusDedup, SmallCalls)}
+WORKLOADS = {w.name: w for w in (TsPrepFit, CorpusDedup, TsPrep, ModelFit, SmallCalls)}
