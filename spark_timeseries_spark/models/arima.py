@@ -228,6 +228,16 @@ def hannan_rissanen(dy: np.ndarray, p: int, q: int, intercept: bool) -> np.ndarr
     return beta
 
 
+def arima_start(
+    y: np.ndarray, p: int, d: int, q: int, include_intercept: bool = True
+) -> np.ndarray:
+    """The deterministic optimizer start of :func:`fit_arima`: Hannan-Rissanen
+    on the order-``d`` differenced series."""
+    return hannan_rissanen(
+        difference(np.asarray(y, dtype=float), d), p, q, include_intercept
+    )
+
+
 def fit_arima(
     y: np.ndarray,
     p: int,
@@ -245,7 +255,7 @@ def fit_arima(
     if init_params is not None:
         x0 = np.asarray(init_params, dtype=float)
     else:
-        x0 = hannan_rissanen(dy, p, q, include_intercept)
+        x0 = arima_start(y, p, d, q, include_intercept)
 
     # objective on the precomputed differenced series; coefficient layout
     # matches ARIMAModel ([c?, ar_1..p, ma_1..q])
@@ -270,20 +280,28 @@ def fit_arima(
     return ARIMAModel(p, d, q, x, include_intercept)
 
 
-def auto_fit(y: np.ndarray, max_p: int = 5, max_d: int = 2, max_q: int = 5) -> ARIMAModel:
-    """Stepwise Hyndman-Khandakar search (``ARIMA.scala:280-375``):
-    d by repeated KPSS at 5%, then greedy ±1 moves on (p,q) by approx AIC."""
+def auto_start(y: np.ndarray, max_d: int = 2) -> ARIMAModel:
+    """ARIMA(0, d, 0) with d chosen by repeated KPSS at 5%: the order
+    :func:`auto_fit` searches at and the simplest candidate it scores, so
+    its result never has a worse approximate AIC."""
     from ..stats.tests import kpss_test
 
-    y = np.asarray(y, dtype=float)
     d = 0
-    work = y
+    work = np.asarray(y, dtype=float)
     while d < max_d:
         stat, crits = kpss_test(work, "c")
         if stat < crits["5%"]:
             break
         work = np.diff(work)
         d += 1
+    return fit_arima(y, 0, d, 0, include_intercept=d == 0)
+
+
+def auto_fit(y: np.ndarray, max_p: int = 5, max_d: int = 2, max_q: int = 5) -> ARIMAModel:
+    """Stepwise Hyndman-Khandakar search (``ARIMA.scala:280-375``):
+    d by repeated KPSS at 5%, then greedy ±1 moves on (p,q) by approx AIC."""
+    y = np.asarray(y, dtype=float)
+    d = auto_start(y, max_d).d
 
     def safe_fit(p, q):
         try:

@@ -11,6 +11,14 @@ results as plain DataFrames:
 - :func:`residuals`    → (key, loc, ts, value) with model effects removed
 - :func:`test_series`  → (key, stat, p_value) for a named statistical test
 
+Each model is one entry of :data:`_MODELS` (class, fit, parameter layout,
+optimizer start, objective) and each test one entry of :data:`_TESTS`, so a
+new model or test is one table entry. What a model can do (forecast, remove
+effects, forecast variance) is read from its class, the way the reference's
+``TimeSeriesModel`` trait (``models/TimeSeriesModel.scala:23-45``) declares
+it. Every public function runs its per-series work through one grouped map,
+:func:`_per_series`.
+
 Scale notes: the plan is one exchange on the key (reused if the input is
 already hash-partitioned by key); each series must fit in executor memory —
 the same envelope the reference assumes
@@ -19,153 +27,300 @@ the same envelope the reference assumes
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..parallel import spread_kernel
+from ..stats import tests as st
 from . import arima as arima_mod
 from . import arx as arx_mod
 from . import univariate as uni
 
 
-def _series_from(pdf: pd.DataFrame, order_col: str, value_col: str) -> np.ndarray:
-    pdf = pdf.sort_values(order_col)
-    return pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
+class _Model(NamedTuple):
+    """One fittable model.
+
+    - ``cls``: the class of the fitted model; None for selectors
+      (``ewma_grid``, ``arima_auto``) that have no model object to run.
+    - ``fit(y, kw, start)``: the fitted model. ``start`` is the
+      certificate's precomputed optimizer start or None; only ``arima``,
+      whose public fit takes its start, uses it.
+    - ``params(fitted)``: the flat vector :func:`fit_models` returns.
+    - ``load(params, kw)``: the model object for those params.
+    - ``start(y, kw)``: the model at the optimizer's deterministic start,
+      and ``objective(model, y)``: the value the fit lowers. Both None for
+      exact fits, which need no certificate.
+    - ``defaults``: the keyword arguments the entry reads, with defaults.
+    """
+
+    cls: type | None
+    fit: Callable
+    params: Callable
+    load: Callable | None = None
+    start: Callable | None = None
+    objective: Callable | None = None
+    defaults: dict = {}
 
 
-def _spread(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition by key with an EXPLICIT partition count before a
-    grouped-map stage. Without this, AQE coalesces the small shuffled input
-    to one partition and the (CPU-bound, Python-side) per-series estimators
-    run serially — the classic small-input/expensive-UDF mismatch. AQE's
-    byte-based coalescing cannot see Python CPU cost, but it preserves
-    user-specified repartition counts, so this explicit repartition is
-    enough — no session-wide coalescing override (which would force
-    full-width task counts on every tiny JVM shuffle in the plan).
-
-    The count must DIFFER from the upstream partitioning: when the input is
-    already hash-partitioned by key with the same count (e.g. a window-fill
-    chain over `partitionBy(key)` with `spark.sql.shuffle.partitions`
-    partitions), the optimizer prunes the repartition as redundant, the
-    grouped map rides the upstream ENSURE_REQUIREMENTS exchange, and AQE
-    coalesces that to ONE partition — measured 7× slowdown (serialized
-    fits). An odd `2·parallelism + 1` count never matches cores or the
-    usual shuffle-partition settings and load-balances CPU-skewed series."""
-    from ..parallel import spread_kernel
-
-    return spread_kernel(df, key_col)
+def _neg_ll(m, y) -> float:
+    return -m.log_likelihood(y)
 
 
-def _clean(y: np.ndarray) -> np.ndarray:
-    return y[~np.isnan(y)]
+def _arima_model(coefficients, kw) -> arima_mod.ARIMAModel:
+    return arima_mod.ARIMAModel(
+        kw["p"], kw["d"], kw["q"], coefficients, kw["include_intercept"]
+    )
 
 
-_KNOWN_MODELS = (
-    "ar", "ewma", "ewma_grid", "garch", "egarch", "argarch", "holtwinters",
-    "arima", "arima_auto",
-)
-_KNOWN_XREG_MODELS = ("arx", "arimax", "regression_arima")
-#: models with a mean-forecast path — the volatility family's mean
-#: forecast is identically 0 only for plain GARCH (handled explicitly);
-#: egarch/argarch and the grid/auto selector aliases have no forecast
-#: implementation, and accepting them made every per-series task fail
-#: inside the NaN-swallowing except (silent all-NaN output)
-_FORECASTABLE = ("ar", "ewma", "garch", "holtwinters", "arima")
-#: models whose fitted object implements remove_effects
-_RESIDUAL_MODELS = ("ar", "ewma", "garch", "egarch", "argarch", "arima")
-_KNOWN_TESTS = (
-    "adf", "kpss", "dw", "ljung_box", "breusch_godfrey", "breusch_pagan",
-    "arch_lm",
-)
+_MODELS = {
+    "ar": _Model(
+        uni.ARModel,
+        lambda y, kw, _: uni.fit_ar(y, kw["max_lag"], kw["no_intercept"]),
+        lambda m: np.concatenate([[m.c], m.coefficients]),
+        lambda p, kw: uni.ARModel(float(p[0]), p[1:]),
+        defaults={"max_lag": 1, "no_intercept": False},
+    ),
+    "ewma": _Model(
+        uni.EWMAModel,
+        lambda y, kw, _: uni.fit_ewma(y),
+        lambda m: np.array([m.smoothing]),
+        lambda p, kw: uni.EWMAModel(float(p[0])),
+        lambda y, kw: uni.ewma_start(),
+        lambda m, y: m.sse(y),
+    ),
+    "ewma_grid": _Model(
+        None,
+        lambda y, kw, _: uni.fit_ewma_grid(y, kw["steps"]),
+        np.array,  # (alpha, sse)
+        defaults={"steps": 100},
+    ),
+    "garch": _Model(
+        uni.GARCHModel,
+        lambda y, kw, _: uni.fit_garch(y),
+        lambda m: np.array([m.omega, m.alpha, m.beta]),
+        lambda p, kw: uni.GARCHModel(*map(float, p)),
+        lambda y, kw: uni.garch_start(y),
+        _neg_ll,
+    ),
+    "egarch": _Model(
+        uni.EGARCHModel,
+        lambda y, kw, _: uni.fit_egarch(y),
+        lambda m: np.array([m.omega, m.alpha, m.gamma, m.beta]),
+        lambda p, kw: uni.EGARCHModel(*map(float, p)),
+        lambda y, kw: uni.egarch_start(y),
+        _neg_ll,
+    ),
+    "argarch": _Model(
+        uni.ARGARCHModel,
+        lambda y, kw, _: uni.fit_ar_garch(y),
+        lambda m: np.array(
+            [m.c, m.phi, m.garch.omega, m.garch.alpha, m.garch.beta]
+        ),
+        lambda p, kw: uni.ARGARCHModel(
+            float(p[0]), float(p[1]), uni.GARCHModel(*map(float, p[2:]))
+        ),
+        lambda y, kw: uni.ar_garch_start(y),
+        lambda m, y: -m.garch.log_likelihood(m.innovations(y)),
+    ),
+    "holtwinters": _Model(
+        uni.HoltWintersModel,
+        lambda y, kw, _: uni.fit_holt_winters(y, kw["period"], kw["model_type"]),
+        lambda m: np.array([m.alpha, m.beta, m.gamma, m.sse_]),
+        lambda p, kw: uni.HoltWintersModel(
+            kw["period"], float(p[0]), float(p[1]), float(p[2]), kw["model_type"]
+        ),
+        lambda y, kw: uni.holt_winters_start(kw["period"], kw["model_type"]),
+        lambda m, y: m.sse(y),
+        {"period": 12, "model_type": "additive"},
+    ),
+    "arima": _Model(
+        arima_mod.ARIMAModel,
+        lambda y, kw, start: arima_mod.fit_arima(
+            y, kw["p"], kw["d"], kw["q"], kw["include_intercept"],
+            None if start is None else start.coefficients,
+        ),
+        lambda m: m.coefficients,
+        _arima_model,
+        lambda y, kw: _arima_model(
+            arima_mod.arima_start(
+                y, kw["p"], kw["d"], kw["q"], kw["include_intercept"]
+            ),
+            kw,
+        ),
+        lambda m, y: -m.log_likelihood_css(y),
+        {"p": 1, "d": 0, "q": 0, "include_intercept": True},
+    ),
+    "arima_auto": _Model(
+        None,
+        lambda y, kw, _: arima_mod.auto_fit(
+            y, kw["max_p"], kw["max_d"], kw["max_q"]
+        ),
+        lambda m: np.concatenate([[m.p, m.d, m.q], m.coefficients]),
+        start=lambda y, kw: arima_mod.auto_start(y, kw["max_d"]),
+        objective=lambda m, y: m.approx_aic(y),
+        defaults={"max_p": 5, "max_d": 2, "max_q": 5},
+    ),
+}
+
+
+def _arimax_args(kw: dict) -> tuple:
+    """(p, d, q, xreg_max_lag, include_original_xreg, include_intercept)"""
+    return (
+        kw.get("p", 1), kw.get("d", 0), kw.get("q", 0),
+        kw.get("xreg_max_lag", 0),
+        kw.get("include_original_xreg", True),
+        kw.get("include_intercept", True),
+    )
+
+
+def _fit_arx(y, X, kw):
+    yl, xl = kw.get("y_max_lag", 1), kw.get("x_max_lag", 1)
+    m = arx_mod.fit_arx(
+        y, X, yl, xl,
+        kw.get("include_original_x", True), kw.get("no_intercept", False),
+    )
+    return np.concatenate([[m.c], m.coefficients]), [yl, xl]
+
+
+def _fit_arimax(y, X, kw):
+    args = _arimax_args(kw)
+    return arx_mod.fit_arimax(y, X, *args).coefficients, args[:3]
+
+
+def _fit_regression_arima(y, X, kw):
+    m = arx_mod.fit_regression_arima_cochrane_orcutt(y, X, kw.get("max_iter", 10))
+    return m.beta, [m.rho, m.dw, m.iterations, m.dw0]
+
+
+#: exogenous-regressor models: name → fit(y, X, kwargs) → (params, aux)
+_XREG_MODELS = {
+    "arx": _fit_arx,
+    "arimax": _fit_arimax,
+    "regression_arima": _fit_regression_arima,
+}
+
+
+def _trend(y: np.ndarray) -> np.ndarray:
+    return np.arange(len(y), dtype=float)[:, None]
+
+
+#: statistical tests: name → run(y, kwargs) → (stat, p_value). The BG/BP
+#: auxiliary regressions use a linear time trend as the factor matrix.
+_TESTS = {
+    "adf": lambda y, kw: st.adf_test(
+        y, kw.get("max_lag", 1), kw.get("regression", "c")
+    ),
+    "kpss": lambda y, kw: (st.kpss_test(y, kw.get("method", "c"))[0], np.nan),
+    "dw": lambda y, kw: (st.durbin_watson(y), np.nan),
+    "ljung_box": lambda y, kw: st.ljung_box(y, kw.get("max_lag", 10)),
+    "breusch_godfrey": lambda y, kw: st.breusch_godfrey(
+        y, _trend(y), kw.get("max_lag", 1)
+    ),
+    "breusch_pagan": lambda y, kw: st.breusch_pagan(y, _trend(y)),
+    "arch_lm": lambda y, kw: st.arch_lm(y, kw.get("max_lag", 1)),
+}
 
 
 #: accepted spellings → canonical registry names
 _MODEL_ALIASES = {"holt_winters": "holtwinters", "ljungbox": "ljung_box"}
 
 
-def _require(name: str, known: tuple) -> str:
+def _require(name: str, known) -> str:
     """Name validation happens BEFORE the grouped-map UDF is shipped: a typo
     fails fast on the driver instead of inside every task, and the per-series
-    except-all below can then safely degrade real estimator failures (short /
-    degenerate series) to empty params rather than failing the stage.
-    Returns the canonical name (aliases like ``holt_winters`` normalize)."""
+    except-all in :func:`_per_series` can then safely degrade real estimator
+    failures (short / degenerate series) to empty params rather than failing
+    the stage. Returns the canonical name (aliases like ``holt_winters``
+    normalize)."""
     name = _MODEL_ALIASES.get(name, name)
     if name not in known:
-        raise ValueError(f"unknown model/test {name!r}; expected one of {known}")
+        raise ValueError(
+            f"unknown model/test {name!r}; expected one of {tuple(known)}"
+        )
     return name
 
 
-def _fit_one(model: str, y: np.ndarray, kwargs: dict):
-    if model == "ar":
-        m = uni.fit_ar(y, kwargs.get("max_lag", 1), kwargs.get("no_intercept", False))
-        return np.concatenate([[m.c], m.coefficients])
-    if model == "ewma":
-        return np.array([uni.fit_ewma(y).smoothing])
-    if model == "ewma_grid":
-        alpha, sse = uni.fit_ewma_grid(y, kwargs.get("steps", 100))
-        return np.array([alpha, sse])
-    if model == "garch":
-        m = uni.fit_garch(y)
-        return np.array([m.omega, m.alpha, m.beta])
-    if model == "egarch":
-        m = uni.fit_egarch(y)
-        return np.array([m.omega, m.alpha, m.gamma, m.beta])
-    if model == "argarch":
-        m = uni.fit_ar_garch(y)
-        return np.array([m.c, m.phi, m.garch.omega, m.garch.alpha, m.garch.beta])
-    if model == "holtwinters":
-        m = uni.fit_holt_winters(
-            y, kwargs.get("period", 12), kwargs.get("model_type", "additive")
-        )
-        return np.array([m.alpha, m.beta, m.gamma, m.sse_])
-    if model == "arima":
-        m = arima_mod.fit_arima(
-            y,
-            kwargs.get("p", 1),
-            kwargs.get("d", 0),
-            kwargs.get("q", 0),
-            kwargs.get("include_intercept", True),
-        )
-        return m.coefficients
-    if model == "arima_auto":
-        m = arima_mod.auto_fit(
-            y, kwargs.get("max_p", 5), kwargs.get("max_d", 2), kwargs.get("max_q", 5)
-        )
-        return np.concatenate([[m.p, m.d, m.q], m.coefficients])
-    raise ValueError(f"unknown model {model}")
+def _able(method: str) -> tuple:
+    """The models whose class implements ``method``."""
+    return tuple(n for n, e in _MODELS.items() if hasattr(e.cls, method))
 
 
-def _model_obj(model: str, params: np.ndarray, kwargs: dict):
-    if model == "ar":
-        return uni.ARModel(float(params[0]), params[1:])
-    if model == "ewma":
-        return uni.EWMAModel(float(params[0]))
-    if model == "garch":
-        return uni.GARCHModel(*map(float, params))
-    if model == "egarch":
-        return uni.EGARCHModel(*map(float, params))
-    if model == "argarch":
-        return uni.ARGARCHModel(
-            float(params[0]), float(params[1]), uni.GARCHModel(*map(float, params[2:]))
-        )
-    if model == "holtwinters":
-        return uni.HoltWintersModel(
-            kwargs.get("period", 12),
-            float(params[0]),
-            float(params[1]),
-            float(params[2]),
-            kwargs.get("model_type", "additive"),
-        )
-    if model == "arima":
-        return arima_mod.ARIMAModel(
-            kwargs.get("p", 1),
-            kwargs.get("d", 0),
-            kwargs.get("q", 0),
-            params,
-            kwargs.get("include_intercept", True),
-        )
-    raise ValueError(f"unknown model {model}")
+def _model_for(e: _Model, y: np.ndarray, kw: dict, params=None):
+    """The model object for ``params``, or for the params fitted to ``y``."""
+    if params is None:
+        params = e.params(e.fit(y, kw, None))
+    return e.load(params, kw)
+
+
+def _no_worse(fitted: float, start: float) -> bool:
+    return bool(fitted <= start * (1 + 1e-9) + 1e-9)
+
+
+def _per_series(
+    df: DataFrame,
+    schema,
+    parts: list,
+    key_col: str,
+    order_col: str,
+    cols: list,
+    keyed: bool = True,
+    in_place: bool = False,
+) -> DataFrame:
+    """The one grouped map behind every public function in this module.
+
+    Each group is one series, sorted by ``order_col``. ``cols`` are read as
+    floats (NULL → NaN), and rows with a NaN in any of them are dropped
+    unless ``in_place``. Each ``(kernel, fail)`` in ``parts`` is called as
+    ``kernel(y)``, or ``kernel(y, X)`` with the further columns as a
+    matrix, and returns output columns as a dict. A kernel that raises on
+    this series (too short, singular, degenerate) contributes ``fail``'s
+    columns instead, so one bad series degrades its own values, not the
+    Spark stage; ``fail=None`` lets the error fail the stage.
+
+    Output rows are ``(key, <kernel columns>)``, or only the kernel columns
+    when not ``keyed``; ``in_place`` returns the input rows instead, with
+    ``cols[0]`` replaced by the kernel column of that name.
+
+    The explicit :func:`~spark_timeseries_spark.parallel.spread_kernel`
+    repartition keeps AQE from coalescing the CPU-bound Python stage to
+    one task."""
+
+    def _g(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col)
+        v = pdf[list(cols)].to_numpy(dtype=float, na_value=np.nan)
+        if not in_place:
+            v = v[~np.isnan(v).any(axis=1)]
+        args = [np.ascontiguousarray(v[:, 0])]
+        if len(cols) > 1:
+            args.append(np.ascontiguousarray(v[:, 1:]))
+        out = {"key": pdf[key_col].iloc[0]} if keyed else {}
+        for kernel, fail in parts:
+            try:
+                out.update(kernel(*args))
+            except Exception:
+                if fail is None:
+                    raise
+                out.update(fail)
+        if in_place:
+            new = np.broadcast_to(out[cols[0]], len(pdf))
+            pdf[cols[0]] = [None if np.isnan(x) else float(x) for x in new]
+            return pdf
+        return pd.DataFrame(out)
+
+    return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
+        _g, schema=schema
+    )
+
+
+def _path(horizon: int, col: str, run) -> list:
+    """Parts for an h-step path (step, ``col``) of ``run(y)``; NaN on failure."""
+    steps = np.arange(1, horizon + 1, dtype=np.int64)
+    return [(lambda y: {"step": steps}, None),
+            (lambda y: {col: run(y)}, {col: np.full(horizon, np.nan)})]
 
 
 def fit_models(
@@ -177,21 +332,18 @@ def fit_models(
     **kwargs,
 ) -> DataFrame:
     """Per-series estimation → (key, model, params)."""
-    model = _require(model, _KNOWN_MODELS)
+    model = _require(model, _MODELS)
+    e = _MODELS[model]
+    kw = {**e.defaults, **kwargs}
 
-    def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        try:
-            params = _fit_one(model, y, kwargs)
-        except Exception:
-            params = np.array([])
-        return pd.DataFrame(
-            {"key": [key], "model": [model], "params": [params.tolist()]}
-        )
+    def _fit(y):
+        params = e.params(e.fit(y, kw, None))
+        return {"model": [model], "params": [params.tolist()]}
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fit, schema="key string, model string, params array<double>"
+    return _per_series(
+        df, "key string, model string, params array<double>",
+        [(_fit, {"model": [model], "params": [[]]})],
+        key_col, order_col, [value_col],
     )
 
 
@@ -208,41 +360,17 @@ def forecast(
 
     Pass ``params=[...]`` to skip the fit and forecast with a known parameter
     vector (the distributed analog of forecasting from a pre-fit model)."""
-    model = _require(model, _FORECASTABLE)
-    fixed_params = kwargs.pop("params", None)
-
-    def _fc(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        try:
-            params = (
-                np.asarray(fixed_params, dtype=float)
-                if fixed_params is not None
-                else _fit_one(model, y, kwargs)
-            )
-            m = _model_obj(model, params, kwargs)
-            if model == "ewma":
-                s = m.add_effects(y)
-                fc = np.full(horizon, s[-1])
-            elif model == "garch":
-                # the mean forecast of a pure GARCH process IS 0 — the
-                # interesting quantity, the conditional variance path, is
-                # exposed by :func:`variance_forecast`
-                fc = np.zeros(horizon)
-            else:
-                fc = m.forecast(y, horizon)
-        except Exception:
-            fc = np.full(horizon, np.nan)
-        return pd.DataFrame(
-            {
-                "key": key,
-                "step": np.arange(1, horizon + 1, dtype=np.int64),
-                "forecast": fc,
-            }
-        )
-
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fc, schema="key string, step long, forecast double"
+    model = _require(model, _able("forecast"))
+    e = _MODELS[model]
+    fixed = kwargs.pop("params", None)
+    if fixed is not None:
+        fixed = np.asarray(fixed, dtype=float)
+    kw = {**e.defaults, **kwargs}
+    return _per_series(
+        df, "key string, step long, forecast double",
+        _path(horizon, "forecast",
+              lambda y: _model_for(e, y, kw, fixed).forecast(y, horizon)),
+        key_col, order_col, [value_col],
     )
 
 
@@ -256,28 +384,19 @@ def residuals(
 ) -> DataFrame:
     """Fit per series and remove time-dependent effects
     (``TimeSeriesModel.removeTimeDependentEffects``)."""
-    model = _require(model, _RESIDUAL_MODELS)
-    out_schema = df.schema
+    e = _MODELS[_require(model, _able("remove_effects"))]
+    kw = {**e.defaults, **kwargs}
 
-    def _resid(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        y = pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
-        mask = ~np.isnan(y)
-        try:
-            params = _fit_one(model, y[mask], kwargs)
-            m = _model_obj(model, params, kwargs)
-            res = np.full(len(y), np.nan)
-            res[mask] = (
-                m.remove_effects(y[mask])
-                if hasattr(m, "remove_effects")
-                else np.nan
-            )
-        except Exception:
-            res = np.full(len(y), np.nan)
-        pdf[value_col] = [None if np.isnan(v) else float(v) for v in res]
-        return pdf
+    def _resid(y):
+        keep = ~np.isnan(y)
+        res = np.full(len(y), np.nan)
+        res[keep] = _model_for(e, y[keep], kw).remove_effects(y[keep])
+        return {value_col: res}
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(_resid, schema=out_schema)
+    return _per_series(
+        df, df.schema, [(_resid, {value_col: np.nan})],
+        key_col, order_col, [value_col], in_place=True,
+    )
 
 
 def apply_model_effects(
@@ -294,18 +413,13 @@ def apply_model_effects(
     (``models/TimeSeriesModel.scala:23-45``): apply a model's filter (or its
     inverse) to every series with ONE fixed parameter vector. Grouped-map
     pandas UDF; the value column is replaced in place, schema unchanged."""
-    params = np.asarray(params, dtype=float)
-    m = _model_obj(model, params, kwargs)
+    e = _MODELS[_require(model, _able("add_effects" if add else "remove_effects"))]
+    m = e.load(np.asarray(params, dtype=float), {**e.defaults, **kwargs})
+    effect = m.add_effects if add else m.remove_effects
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        y = pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
-        out = m.add_effects(y) if add else m.remove_effects(y)
-        pdf[value_col] = [None if np.isnan(v) else float(v) for v in out]
-        return pdf
-
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _apply, schema=df.schema
+    return _per_series(
+        df, df.schema, [(lambda y: {value_col: effect(y)}, None)],
+        key_col, order_col, [value_col], in_place=True,
     )
 
 
@@ -326,62 +440,21 @@ def fit_xreg_models(
     ``RegressionARIMA.scala:83-160``). ``aux`` carries model-specific
     extras: arx → [y_max_lag, x_max_lag]; arimax → [p, d, q];
     regression_arima → [rho, dw, iterations, dw0]."""
-    model = _require(model, _KNOWN_XREG_MODELS)
+    model = _require(model, _XREG_MODELS)
+    fit = _XREG_MODELS[model]
 
-    def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        pdf = pdf.sort_values(order_col)
-        y = pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
-        X = pdf[list(xreg_cols)].to_numpy(dtype=float, na_value=np.nan)
-        mask = ~np.isnan(y) & ~np.isnan(X).any(axis=1)
-        y, X = y[mask], X[mask]
-        params, aux = np.array([]), np.array([])
-        try:
-            if model == "arx":
-                yl = kwargs.get("y_max_lag", 1)
-                xl = kwargs.get("x_max_lag", 1)
-                m = arx_mod.fit_arx(
-                    y, X, yl, xl,
-                    kwargs.get("include_original_x", True),
-                    kwargs.get("no_intercept", False),
-                )
-                params = np.concatenate([[m.c], m.coefficients])
-                aux = np.array([yl, xl], dtype=float)
-            elif model == "arimax":
-                p = kwargs.get("p", 1)
-                d = kwargs.get("d", 0)
-                q = kwargs.get("q", 0)
-                m = arx_mod.fit_arimax(
-                    y, X, p, d, q,
-                    kwargs.get("xreg_max_lag", 0),
-                    kwargs.get("include_original_xreg", True),
-                    kwargs.get("include_intercept", True),
-                )
-                params = np.asarray(m.coefficients, dtype=float)
-                aux = np.array([p, d, q], dtype=float)
-            elif model == "regression_arima":
-                m = arx_mod.fit_regression_arima_cochrane_orcutt(
-                    y, X, kwargs.get("max_iter", 10)
-                )
-                params = np.asarray(m.beta, dtype=float)
-                aux = np.array([m.rho, m.dw, m.iterations, m.dw0], dtype=float)
-        except Exception:
-            # same per-series degradation as fit_models: one degenerate
-            # series (too short for the lag order, singular design) yields
-            # empty params instead of failing the whole Spark stage
-            params, aux = np.array([]), np.array([])
-        return pd.DataFrame(
-            {
-                "key": [key],
-                "model": [model],
-                "params": [params.tolist()],
-                "aux": [aux.tolist()],
-            }
-        )
+    def _fit(y, X):
+        params, aux = fit(y, X, kwargs)
+        return {
+            "model": [model],
+            "params": [np.asarray(params, dtype=float).tolist()],
+            "aux": [np.asarray(aux, dtype=float).tolist()],
+        }
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _fit,
-        schema="key string, model string, params array<double>, aux array<double>",
+    return _per_series(
+        df, "key string, model string, params array<double>, aux array<double>",
+        [(_fit, {"model": [model], "params": [[]], "aux": [[]]})],
+        key_col, order_col, [value_col, *xreg_cols],
     )
 
 
@@ -395,80 +468,19 @@ def variance_forecast(
     **kwargs,
 ) -> DataFrame:
     """Per-series conditional-variance forecast → (key, step, variance).
-    ``model`` ∈ garch | argarch: fits the model, then iterates the variance
+    ``model`` ∈ garch | egarch | argarch (the models whose class has a
+    ``variance_forecast``): fits the model, then iterates the variance
     recursion h steps ahead (``GARCH.scala:198-259`` is the recursion shape;
     the reference never exposes a variance path — this is the quantity a
     GARCH user actually wants, so we surface it)."""
-    if model not in ("garch", "argarch"):
-        raise ValueError("variance_forecast supports garch | argarch")
-
-    def _vf(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        try:
-            if model == "garch":
-                g = uni.fit_garch(y)
-                vf = g.variance_forecast(y, horizon)
-            else:
-                m = uni.fit_ar_garch(y)
-                resid = uni.ARModel(m.c, np.array([m.phi])).remove_effects(y)
-                resid[0] = 0.0
-                vf = m.garch.variance_forecast(resid, horizon)
-        except Exception:
-            vf = np.full(horizon, np.nan)
-        return pd.DataFrame(
-            {
-                "key": key,
-                "step": np.arange(1, horizon + 1, dtype=np.int64),
-                "variance": vf,
-            }
-        )
-
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _vf, schema="key string, step long, variance double"
+    e = _MODELS[_require(model, _able("variance_forecast"))]
+    kw = {**e.defaults, **kwargs}
+    return _per_series(
+        df, "key string, step long, variance double",
+        _path(horizon, "variance",
+              lambda y: _model_for(e, y, kw).variance_forecast(y, horizon)),
+        key_col, order_col, [value_col],
     )
-
-
-def _certificate_one(model: str, y: np.ndarray, kwargs: dict) -> tuple[float, float]:
-    """(objective at fitted params, objective at the optimizer's start) for
-    one series — the deterministic inequality behind :func:`fit_improvement`.
-    Lower is better for every objective (SSE or negative log-likelihood)."""
-    if model == "ewma":
-        return uni.fit_ewma(y).sse(y), uni.EWMAModel(0.94).sse(y)
-    if model == "garch":
-        var = float(np.var(y)) or 1.0
-        start = uni.GARCHModel(var * 0.1, 0.1, 0.8)
-        return -uni.fit_garch(y).log_likelihood(y), -start.log_likelihood(y)
-    if model == "egarch":
-        start = uni.egarch_start(y)
-        return -uni.fit_egarch(y).log_likelihood(y), -start.log_likelihood(y)
-    if model == "argarch":
-        ar = uni.fit_ar(y, 1)
-        resid = ar.remove_effects(y)
-        resid[0] = 0.0
-        var = float(np.var(resid)) or 1.0
-        start = uni.GARCHModel(var * 0.1, 0.1, 0.8)
-        fitted = uni.fit_garch(resid)
-        return -fitted.log_likelihood(resid), -start.log_likelihood(resid)
-    if model == "holtwinters":
-        period = kwargs.get("period", 12)
-        mt = kwargs.get("model_type", "additive")
-        m = uni.fit_holt_winters(y, period, mt)
-        base = uni.HoltWintersModel(period, 0.3, 0.1, 0.1, mt)
-        return m.sse_, base.sse(y)
-    if model == "arima":
-        p, d, q = kwargs.get("p", 1), kwargs.get("d", 0), kwargs.get("q", 0)
-        ic = kwargs.get("include_intercept", True)
-        dy = arima_mod.difference(y, d)
-        x0 = arima_mod.hannan_rissanen(dy, p, q, ic)
-        start = arima_mod.ARIMAModel(p, d, q, x0, ic)
-        fitted = arima_mod.fit_arima(y, p, d, q, include_intercept=ic)
-        return -fitted.log_likelihood_css(y), -start.log_likelihood_css(y)
-    if model == "arima_auto":
-        fitted = arima_mod.auto_fit(y)
-        naive = arima_mod.fit_arima(y, 0, fitted.d, 0, include_intercept=fitted.d == 0)
-        return fitted.approx_aic(y), naive.approx_aic(y)
-    raise ValueError(f"no certificate for model {model}")
 
 
 def fit_improvement(
@@ -483,28 +495,27 @@ def fit_improvement(
 
     ``ok`` asserts the fitted objective is no worse than the objective at the
     optimizer's own deterministic starting point (HR init for ARIMA, the
-    fixed CG/simplex starts otherwise) — the strongest *hashable* statement
-    about an iterative fit: the optimum itself is optimizer-path-dependent,
-    but "the optimizer never returns something worse than its start" is an
-    exact boolean the DuckDB oracle can assert per key. A per-series fit
-    failure (degenerate input) yields ok = false, so the certificate also
-    gates silent degradation."""
-    model = _require(model, _KNOWN_MODELS)
-    if model in ("ar", "ewma_grid"):
+    fixed CG/simplex starts otherwise, ARIMA(0,d,0) for the auto search) —
+    the strongest *hashable* statement about an iterative fit: the optimum
+    itself is optimizer-path-dependent, but "the optimizer never returns
+    something worse than its start" is an exact boolean the DuckDB oracle
+    can assert per key. A per-series fit failure (degenerate input) yields
+    ok = false, so the certificate also gates silent degradation."""
+    model = _require(model, _MODELS)
+    e = _MODELS[model]
+    if e.start is None:
         raise ValueError(f"{model} is exactly reproducible; hash its params instead")
+    kw = {**e.defaults, **kwargs}
 
-    def _c(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        try:
-            fitted, start = _certificate_one(model, y, kwargs)
-            ok = bool(fitted <= start * (1 + 1e-9) + 1e-9)
-        except Exception:
-            ok = False
-        return pd.DataFrame({"key": [key], "n": [len(y)], "ok": [ok]})
+    def _ok(y):
+        start = e.start(y, kw)
+        fitted = e.fit(y, kw, start)
+        return {"ok": [_no_worse(e.objective(fitted, y), e.objective(start, y))]}
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _c, schema="key string, n long, ok boolean"
+    return _per_series(
+        df, "key string, n long, ok boolean",
+        [(lambda y: {"n": [len(y)]}, None), (_ok, {"ok": [False]})],
+        key_col, order_col, [value_col],
     )
 
 
@@ -523,34 +534,30 @@ def fit_xreg_improvement(
     (:func:`~spark_timeseries_spark.models.arx.arimax_start`)."""
     if model != "arimax":
         raise ValueError("fit_xreg_improvement supports arimax")
-    p = kwargs.get("p", 1)
-    d = kwargs.get("d", 0)
-    q = kwargs.get("q", 0)
-    xl = kwargs.get("xreg_max_lag", 0)
-    io = kwargs.get("include_original_xreg", True)
-    ii = kwargs.get("include_intercept", True)
+    args = _arimax_args(kwargs)
 
-    def _c(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        pdf = pdf.sort_values(order_col)
-        y = pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
-        X = pdf[list(xreg_cols)].to_numpy(dtype=float, na_value=np.nan)
-        mask = ~np.isnan(y) & ~np.isnan(X).any(axis=1)
-        y, X = y[mask], X[mask]
-        try:
-            x0 = arx_mod.arimax_start(y, X, p, d, q, xl, io, ii)
-            start = arx_mod.ARIMAXModel(p, d, q, xl, io, ii, x0)
-            fitted = arx_mod.fit_arimax(y, X, p, d, q, xl, io, ii)
-            ok = bool(
-                fitted.css(y, X) <= start.css(y, X) * (1 + 1e-9) + 1e-9
-            )
-        except Exception:
-            ok = False
-        return pd.DataFrame({"key": [key], "n": [len(y)], "ok": [ok]})
+    def _ok(y, X):
+        start = arx_mod.ARIMAXModel(*args, arx_mod.arimax_start(y, X, *args))
+        fitted = arx_mod.fit_arimax(y, X, *args)
+        return {"ok": [_no_worse(fitted.css(y, X), start.css(y, X))]}
 
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _c, schema="key string, n long, ok boolean"
+    return _per_series(
+        df, "key string, n long, ok boolean",
+        [(lambda y, X: {"n": [len(y)]}, None), (_ok, {"ok": [False]})],
+        key_col, order_col, [value_col, *xreg_cols],
     )
+
+
+def _test_part(test: str, kw: dict, stat_col: str, p_col: str) -> tuple:
+    """One test's (kernel, fail) for :func:`_per_series`: a degenerate
+    series gives NaN stat and p, like a failed fit gives empty params."""
+    run = _TESTS[test]
+
+    def kernel(y):
+        stat, p = run(y, kw)
+        return {stat_col: [stat], p_col: [p]}
+
+    return kernel, {stat_col: [np.nan], p_col: [np.nan]}
 
 
 def test_series(
@@ -569,48 +576,12 @@ def test_series(
     caller-supplied ``factors``, ``TimeSeriesStatisticalTests.scala:276-329``);
     ``arch_lm`` (beyond-reference, Engle 1982) treats the series values as
     the residuals under test — pre-whiten first if they carry structure."""
-    test = _require(test, _KNOWN_TESTS)
-
-    def _t(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        stat, p = _run_series_test(test, y, kwargs)
-        return pd.DataFrame({"key": [key], "stat": [stat], "p_value": [p]})
-
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _t, schema="key string, stat double, p_value double"
+    test = _require(test, _TESTS)
+    return _per_series(
+        df, "key string, stat double, p_value double",
+        [_test_part(test, kwargs, "stat", "p_value")],
+        key_col, order_col, [value_col],
     )
-
-
-def _run_series_test(test: str, y: np.ndarray, kwargs: dict):
-    """Shared single-test dispatch for :func:`test_series` and
-    :func:`test_series_suite` — one code path so the suite's per-test
-    statistics are bit-identical to the standalone rows'."""
-    from ..stats import tests as st
-
-    stat, p = float("nan"), float("nan")
-    try:
-        if test == "adf":
-            stat, p = st.adf_test(
-                y, kwargs.get("max_lag", 1), kwargs.get("regression", "c")
-            )
-        elif test == "kpss":
-            stat, _ = st.kpss_test(y, kwargs.get("method", "c"))
-        elif test == "dw":
-            stat = st.durbin_watson(y)
-        elif test == "ljung_box":
-            stat, p = st.ljung_box(y, kwargs.get("max_lag", 10))
-        elif test == "breusch_godfrey":
-            trend = np.arange(len(y), dtype=float)[:, None]
-            stat, p = st.breusch_godfrey(y, trend, kwargs.get("max_lag", 1))
-        elif test == "breusch_pagan":
-            trend = np.arange(len(y), dtype=float)[:, None]
-            stat, p = st.breusch_pagan(y, trend)
-        elif test == "arch_lm":
-            stat, p = st.arch_lm(y, kwargs.get("max_lag", 1))
-    except Exception:
-        pass  # degenerate series → NaN stat, like fit_models
-    return stat, p
 
 
 def test_series_suite(
@@ -630,31 +601,30 @@ def test_series_suite(
     Python stages + N−1 key joins; each series is already IN CORE once
     per test, so computing every statistic while it is there collapses
     the plan to ONE scan + ONE exchange + ONE Python stage with zero
-    change to any statistic (the dispatch is shared —
-    :func:`_run_series_test`)."""
-    # normalize aliases up front (e.g. 'ljungbox' -> 'ljung_box'): the
-    # kernel dispatches on the CANONICAL name, so a validated-but-raw
-    # alias would silently match no branch and yield NaN stat/p
-    specs = [
-        (name, _require(test, _KNOWN_TESTS), kw) for name, test, kw in specs
+    change to any statistic (each spec is the same :func:`_test_part`,
+    and a failing test NaNs only its own columns)."""
+    parts = [
+        _test_part(_require(test, _TESTS), kw, f"{name}_stat", f"{name}_p")
+        for name, test, kw in specs
     ]
-
-    def _t(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        y = _clean(_series_from(pdf, order_col, value_col))
-        row: dict = {"key": [key]}
-        for name, test, kw in specs:
-            stat, p = _run_series_test(test, y, kw)
-            row[f"{name}_stat"] = [stat]
-            row[f"{name}_p"] = [p]
-        return pd.DataFrame(row)
-
     fields = ", ".join(
         f"`{name}_stat` double, `{name}_p` double" for name, _, _ in specs
     )
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _t, schema=f"key string, {fields}"
+    return _per_series(
+        df, f"key string, {fields}", parts, key_col, order_col, [value_col]
     )
+
+
+def _pair(df: DataFrame, key_a: str, key_b: str, key_col, order_col, value_col):
+    """The two named series aligned on ``order_col`` by one inner
+    equi-join, as one group (``_g``) of (_o, _y, _x) rows."""
+    a = df.where(F.col(key_col) == key_a).select(
+        F.col(order_col).alias("_o"), F.col(value_col).alias("_y")
+    )
+    b = df.where(F.col(key_col) == key_b).select(
+        F.col(order_col).alias("_o"), F.col(value_col).alias("_x")
+    )
+    return a.join(b, "_o").withColumn("_g", F.lit(1))
 
 
 def granger_test(
@@ -678,39 +648,18 @@ def granger_test(
     for gap-free designs); the pair then flows as ONE group through a
     grouped-map kernel, so the OLS runs on an executor, not the driver —
     the same single-series-in-memory envelope as ``crosscorr``."""
-    a = df.where(F.col(key_col) == target_key).select(
-        F.col(order_col).alias("_o"), F.col(value_col).alias("_y")
-    )
-    b = df.where(F.col(key_col) == cause_key).select(
-        F.col(order_col).alias("_o"), F.col(value_col).alias("_x")
-    )
-    j = a.join(b, "_o").where(
-        F.col("_y").isNotNull() & F.col("_x").isNotNull()
-    )
 
-    def _g(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..stats import tests as st
+    def _g(y, X):
+        f, p = st.granger_causality(y, X[:, 0], max_lag)
+        return {"f_stat": [f], "p_value": [p]}
 
-        pdf = pdf.sort_values("_o")
-        f, p = float("nan"), float("nan")
-        try:
-            f, p = st.granger_causality(
-                pdf["_y"].to_numpy(), pdf["_x"].to_numpy(), max_lag
-            )
-        except Exception:
-            pass  # short/degenerate overlap → NaN, like test_series
-        return pd.DataFrame(
-            {
-                "target": [target_key],
-                "cause": [cause_key],
-                "n": [len(pdf)],
-                "f_stat": [f],
-                "p_value": [p],
-            }
-        )
-
-    return j.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        _g, schema="target string, cause string, n long, f_stat double, p_value double"
+    return _per_series(
+        _pair(df, target_key, cause_key, key_col, order_col, value_col),
+        "target string, cause string, n long, f_stat double, p_value double",
+        [(lambda y, X: {"target": [target_key], "cause": [cause_key],
+                        "n": [len(y)]}, None),
+         (_g, {"f_stat": [np.nan], "p_value": [np.nan]})],
+        "_g", "_o", ["_y", "_x"], keyed=False,
     )
 
 
@@ -734,44 +683,20 @@ def cointegration_test(
     then the pair flows as ONE group through a grouped-map kernel so the
     two-step OLS runs on an executor inside the engine's standard
     single-series-in-memory envelope."""
-    from ..stats.tests import EG_CRITICAL_2V, engle_granger
+    crit5 = st.EG_CRITICAL_2V["5%"]
 
-    a = df.where(F.col(key_col) == key_a).select(
-        F.col(order_col).alias("_o"), F.col(value_col).alias("_y")
-    )
-    b = df.where(F.col(key_col) == key_b).select(
-        F.col(order_col).alias("_o"), F.col(value_col).alias("_x")
-    )
-    j = a.join(b, "_o").where(
-        F.col("_y").isNotNull() & F.col("_x").isNotNull()
-    )
-    crit5 = EG_CRITICAL_2V["5%"]
+    def _eg(y, X):
+        alpha, beta, stat = st.engle_granger(y, X[:, 0], max_lag)
+        return {"alpha": [alpha], "beta": [beta], "adf_stat": [stat],
+                "cointegrated_5pct": [bool(stat < crit5)] if stat == stat else [None]}
 
-    def _eg(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_o")
-        alpha, beta, stat = float("nan"), float("nan"), float("nan")
-        try:
-            alpha, beta, stat = engle_granger(
-                pdf["_y"].to_numpy(), pdf["_x"].to_numpy(), max_lag
-            )
-        except Exception:
-            pass  # short/degenerate overlap → NaN, like test_series
-        return pd.DataFrame(
-            {
-                "lhs": [key_a],
-                "rhs": [key_b],
-                "n": [len(pdf)],
-                "alpha": [alpha],
-                "beta": [beta],
-                "adf_stat": [stat],
-                "cointegrated_5pct": [bool(stat < crit5)]
-                if stat == stat
-                else [None],
-            }
-        )
-
-    return j.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        _eg,
-        schema="lhs string, rhs string, n long, alpha double, beta double,"
+    nan = [np.nan]
+    return _per_series(
+        _pair(df, key_a, key_b, key_col, order_col, value_col),
+        "lhs string, rhs string, n long, alpha double, beta double,"
         " adf_stat double, cointegrated_5pct boolean",
+        [(lambda y, X: {"lhs": [key_a], "rhs": [key_b], "n": [len(y)]}, None),
+         (_eg, {"alpha": nan, "beta": nan, "adf_stat": nan,
+                "cointegrated_5pct": [None]})],
+        "_g", "_o", ["_y", "_x"], keyed=False,
     )

@@ -142,6 +142,10 @@ class EWMAModel:
             prev_s = s[i]
         return 2.0 * total
 
+    def forecast(self, y: np.ndarray, h: int) -> np.ndarray:
+        """Flat forecast at the last smoothed level."""
+        return np.full(h, self.add_effects(y)[-1])
+
 
 def fit_ewma_grid(y: np.ndarray, steps: int = 100) -> tuple[float, float]:
     """Exhaustive-grid EWMA fit: α ∈ {1/steps, …, (steps−1)/steps} minimizing
@@ -161,13 +165,18 @@ def fit_ewma_grid(y: np.ndarray, steps: int = 100) -> tuple[float, float]:
     return float(alphas[i]), float(sse[i])
 
 
+def ewma_start() -> EWMAModel:
+    """The deterministic optimizer start of :func:`fit_ewma`."""
+    return EWMAModel(0.94)
+
+
 def fit_ewma(y: np.ndarray) -> EWMAModel:
     y = np.asarray(y, dtype=float)
     clip = lambda p: float(np.clip(p[0], 1e-6, 1.0))
     x = minimize_cg(
         lambda p: EWMAModel(clip(p)).sse(y),
         lambda p: np.array([EWMAModel(clip(p)).gradient(y)]),
-        np.array([0.94]),
+        np.array([ewma_start().smoothing]),
         variant="fletcher-reeves",
     )
     return EWMAModel(clip(x))
@@ -236,6 +245,11 @@ class GARCHModel:
             out[k] = prev
         return out
 
+    def forecast(self, eta: np.ndarray, h: int) -> np.ndarray:
+        """The mean forecast of a pure GARCH process is 0; the conditional
+        variance path is :meth:`variance_forecast`."""
+        return np.zeros(h)
+
     def add_effects(self, z: np.ndarray) -> np.ndarray:
         z = np.asarray(z, dtype=float)
         out = np.empty_like(z)
@@ -253,10 +267,16 @@ class GARCHModel:
         return self.add_effects(rng.standard_normal(n))
 
 
+def garch_start(eta: np.ndarray) -> GARCHModel:
+    """The deterministic optimizer start of :func:`fit_garch`."""
+    var = float(np.var(np.asarray(eta, dtype=float))) or 1.0
+    return GARCHModel(var * 0.1, 0.1, 0.8)
+
+
 def fit_garch(eta: np.ndarray) -> GARCHModel:
     """Maximize the Bollerslev likelihood by CG on (α, β, ω)."""
     eta = np.asarray(eta, dtype=float)
-    var = float(np.var(eta)) or 1.0
+    s = garch_start(eta)
 
     def unpack(p):
         a = float(np.clip(p[0], 1e-6, 0.97))
@@ -266,7 +286,9 @@ def fit_garch(eta: np.ndarray) -> GARCHModel:
 
     f = lambda p: -unpack(p).log_likelihood(eta)
     g = lambda p: -unpack(p).gradient(eta)
-    x = minimize_cg(f, g, np.array([0.1, 0.8, var * 0.1]), variant="fletcher-reeves")
+    x = minimize_cg(
+        f, g, np.array([s.alpha, s.beta, s.omega]), variant="fletcher-reeves"
+    )
     x = nelder_mead(
         f, x, bounds=[(1e-6, 0.97), (1e-6, 0.97), (1e-10, None)], step=0.05
     )
@@ -373,7 +395,6 @@ def fit_egarch(eta: np.ndarray) -> EGARCHModel:
     """Nelder-Mead maximum likelihood from the standard start
     (ω centered on the sample variance, mild ARCH, no leverage, β = 0.9)."""
     eta = np.asarray(eta, dtype=float)
-    var = float(np.var(eta)) or 1.0
 
     def unpack(p):
         b = float(p[3])
@@ -384,7 +405,8 @@ def fit_egarch(eta: np.ndarray) -> EGARCHModel:
             -0.999 if b < -0.999 else (0.999 if b > 0.999 else b),
         )
 
-    x0 = np.array([0.1 * np.log(var), 0.1, 0.0, 0.9])
+    s = egarch_start(eta)
+    x0 = np.array([s.omega, s.alpha, s.gamma, s.beta])
     x = nelder_mead(
         lambda p: -unpack(p).log_likelihood(eta), x0, step=0.1,
         max_iter=800, tol=1e-8,
@@ -411,6 +433,13 @@ class ARGARCHModel:
         resid = ARModel(self.c, np.array([self.phi])).remove_effects(y)
         return self.garch.remove_effects(resid)
 
+    def innovations(self, y: np.ndarray) -> np.ndarray:
+        """The AR(1) residuals the GARCH part is fitted on."""
+        return _ar1_innovations(self.c, self.phi, y)
+
+    def variance_forecast(self, y: np.ndarray, horizon: int) -> np.ndarray:
+        return self.garch.variance_forecast(self.innovations(y), horizon)
+
     def add_effects(self, z: np.ndarray) -> np.ndarray:
         eta = self.garch.add_effects(z)
         return ARModel(self.c, np.array([self.phi])).add_effects(eta)
@@ -419,12 +448,23 @@ class ARGARCHModel:
         return self.add_effects(rng.standard_normal(n))
 
 
-def fit_ar_garch(y: np.ndarray) -> ARGARCHModel:
-    ar = fit_ar(y, 1)
-    resid = ar.remove_effects(y)
+def _ar1_innovations(c: float, phi: float, y: np.ndarray) -> np.ndarray:
+    resid = ARModel(c, np.array([phi])).remove_effects(y)
     resid[0] = 0.0  # first residual lacks its lag term
-    g = fit_garch(resid)
-    return ARGARCHModel(ar.c, float(ar.coefficients[0]), g)
+    return resid
+
+
+def ar_garch_start(y: np.ndarray) -> ARGARCHModel:
+    """The deterministic start of :func:`fit_ar_garch`: the (exact) AR(1)
+    OLS fit and :func:`garch_start` on its innovations."""
+    ar = fit_ar(y, 1)
+    c, phi = ar.c, float(ar.coefficients[0])
+    return ARGARCHModel(c, phi, garch_start(_ar1_innovations(c, phi, y)))
+
+
+def fit_ar_garch(y: np.ndarray) -> ARGARCHModel:
+    s = ar_garch_start(y)
+    return ARGARCHModel(s.c, s.phi, fit_garch(s.innovations(y)))
 
 
 # ---------------------------------------------------------------------------
@@ -526,6 +566,11 @@ class HoltWintersModel:
         return base + seas if self.additive else base * seas
 
 
+def holt_winters_start(period: int, model_type: str = "additive") -> HoltWintersModel:
+    """The deterministic optimizer start of :func:`fit_holt_winters`."""
+    return HoltWintersModel(period, 0.3, 0.1, 0.1, model_type)
+
+
 def fit_holt_winters(
     y: np.ndarray, period: int, model_type: str = "additive"
 ) -> HoltWintersModel:
@@ -539,9 +584,10 @@ def fit_holt_winters(
             y, init_state
         )
 
+    s = holt_winters_start(period, model_type)
     x = nelder_mead(
-        f, np.array([0.3, 0.1, 0.1]), bounds=[(0.0, 1.0)] * 3, step=0.2,
-        max_iter=250, tol=1e-7,
+        f, np.array([s.alpha, s.beta, s.gamma]), bounds=[(0.0, 1.0)] * 3,
+        step=0.2, max_iter=250, tol=1e-7,
     )
     m = HoltWintersModel(period, float(x[0]), float(x[1]), float(x[2]), model_type)
     m.sse_ = m.sse(y)

@@ -1062,7 +1062,11 @@ def kendall_tau_b(
 
     Plan: one groupBy(x, y) full-data pass; a |X|×|Y| crossJoin
     densification; two window passes per direction on the bounded
-    grid; margin groupBys on the cell table; ONE reduce."""
+    grid; margin groupBys on the cell table; ONE reduce.
+
+    Eager: calling this runs a Spark job before it returns — the
+    full-data pass, materialized as the cell table's
+    ``localCheckpoint``; only the grid work stays lazy."""
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     # the cell table is referenced five times below (grid margins, the

@@ -610,7 +610,11 @@ def stratified_log_rank(
     totals, per-(stratum, group) running-exit windows for the at-risk
     ledger, per-(stratum, duration) windows for the shared totals, and
     two one-row reduces. Bin durations at scale (the KM caveat);
-    stratum cardinality is covariate-bounded."""
+    stratum cardinality is covariate-bounded.
+
+    Eager: calling this runs a Spark job before it returns — the
+    full-data pass, materialized as the (stratum, group, duration)
+    table's ``localCheckpoint``; only the grid work stays lazy."""
     # the cell table feeds the grid scaffold, the totals, and the
     # densification join; materialize it once so the full-data pass (and
     # whatever pipeline produced df — time_to_event is itself windowed)
@@ -741,7 +745,11 @@ def concordance_index(
 
     Plan: one groupBy(duration, risk) full-data pass; a |T|×|R|
     crossJoin densification; two bounded-grid window passes; ONE
-    reduce. No data-sized joins, no Python."""
+    reduce. No data-sized joins, no Python.
+
+    Eager: calling this runs a Spark job before it returns — the
+    full-data pass, materialized as the cell table's
+    ``localCheckpoint``; only the grid work stays lazy."""
     t = F.col(duration_col).cast("double")
     r = F.col(risk_col).cast("double")
     e = F.col(event_col).cast("boolean").cast("int")

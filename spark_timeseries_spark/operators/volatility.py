@@ -114,7 +114,12 @@ def var_es(
     construction). NULL where fewer than 2 returns. One lag window +
     one percentile aggregate + one conditional re-aggregate (the
     percentile must land before the tail mean can filter — two passes
-    over the per-key returns, both map-side combinable)."""
+    over the per-key returns, both map-side combinable).
+
+    Eager: calling this runs a Spark job before it returns — the whole
+    upstream plan, materialized as a ``localCheckpoint`` of the (key,
+    return) table, one row per input observation; only the two
+    aggregates stay lazy."""
     if not 0.5 <= alpha < 1.0:
         raise ValueError(f"alpha must be in [0.5, 1), got {alpha}")
     v = F.col(value_col)

@@ -10,15 +10,16 @@ SERIALLY in one Python worker — measured 7× slowdowns at bench scale, and
 on a cluster the same mismatch appears whenever an aggregated (small)
 frame feeds an expensive kernel.
 
-``spread_kernel`` is the shared fix (hoisted from ``models.fit._spread``,
-r9): an EXPLICIT repartition, which AQE preserves (it only coalesces
-ENSURE_REQUIREMENTS exchanges), sized from the runtime's core count, not
-from a constant — local[8] gets 17, local[32] gets 65, a 400-core cluster
-gets 801. The odd ``2·parallelism + 1`` count deliberately differs from
-any usual shuffle-partition setting so the optimizer cannot prune the
-repartition as redundant against an upstream exchange (which WOULD be
-AQE-coalesced; see ``models/fit.py:_spread`` for the measured case), and
-the 2× over-decomposition load-balances CPU-skewed groups.
+``spread_kernel`` is the shared fix (r9): an EXPLICIT repartition, which
+AQE preserves (it only coalesces ENSURE_REQUIREMENTS exchanges), sized
+from the runtime's core count, not from a constant — local[8] gets 17,
+local[32] gets 65, a 400-core cluster gets 801. The odd
+``2·parallelism + 1`` count deliberately differs from any usual
+shuffle-partition setting so the optimizer cannot prune the repartition
+as redundant against an upstream exchange (which WOULD be AQE-coalesced:
+a window-fill chain over ``partitionBy(key)`` feeding a grouped-map model
+fit measured 7× slower, its fits serialized), and the 2×
+over-decomposition load-balances CPU-skewed groups.
 
 ``spread_rows`` is the keyless variant for row-parallel (not grouped)
 kernel stages fed by a single-file scan or a coalesced exchange:

@@ -28,10 +28,11 @@ from pyspark.sql import functions as F
 
 from spark_timeseries_spark.functions import let
 
-#: edge-table row bound under which :func:`connected_components` collects
-#: the (symmetrized, distinct) near-dup edge list and label-propagates at
-#: the driver — a few MB of longs, the broadcast-build-side envelope.
-#: Above it, the distributed loop is the scale path.
+#: edge-table row bound under which :func:`connected_components` and
+#: :func:`~spark_timeseries_spark.pipeline.graph.pagerank` collect the
+#: (symmetrized, distinct) edge list and iterate at the driver — a few MB
+#: of longs, the broadcast-build-side envelope. Above it, the distributed
+#: loops are the scale path.
 DRIVER_EDGE_ROWS = 1 << 17
 
 
@@ -636,9 +637,11 @@ def connected_components(
     on it is a harmless no-op, so r3-era callers still work)."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be raise|warn, got {on_nonconverged!r}")
+    # a NULL (or non-numeric) id names no document: its pairs are no edges,
+    # on either path below
     e = pairs.select(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
-    )
+    ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
     edges = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

@@ -27,14 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["pagerank"]
+from .dedup import DRIVER_EDGE_ROWS
 
-#: edge-table row bound under which :func:`pagerank` collects the
-#: (already symmetrized + distinct) edge list and iterates at the driver —
-#: a few MB of longs, the broadcast-build-side envelope. The fixed-point
-#: integer contract makes the local loop bit-identical by construction;
-#: above the bound the distributed loop below is the scale path.
-DRIVER_EDGE_ROWS = 1 << 17
+__all__ = ["pagerank"]
 
 
 def pagerank(

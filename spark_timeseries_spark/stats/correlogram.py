@@ -21,7 +21,6 @@ import math
 from statistics import NormalDist
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,30 +69,20 @@ def pacf(
     """Per-series partial autocorrelation function →
     (key, lag, pacf, conf_bound): the AR(max_lag) coefficient vector, as in
     the reference. Exactly-reproducible OLS, so oracle-checkable."""
+    from ..models.fit import _per_series
     from ..models.univariate import fit_ar
 
     z = NormalDist().inv_cdf(1.0 - (1.0 - conf) / 2.0)
+    lags = np.arange(1, max_lag + 1, dtype=np.int64)
 
-    def _p(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        pdf = pdf.sort_values(order_col)
-        y = pdf[value_col].to_numpy(dtype=float, na_value=np.nan)
-        y = y[~np.isnan(y)]
-        try:
-            coefs = fit_ar(y, max_lag).coefficients
-        except Exception:
-            coefs = np.full(max_lag, np.nan)
-        return pd.DataFrame(
-            {
-                "key": key,
-                "lag": np.arange(1, max_lag + 1, dtype=np.int64),
-                "pacf": coefs,
-                "conf_bound": z / math.sqrt(len(y)) if len(y) else float("nan"),
-            }
-        )
+    def _bound(y):
+        return {"lag": lags,
+                "conf_bound": z / math.sqrt(len(y)) if len(y) else float("nan")}
 
-    from ..models.fit import _spread
-
-    return _spread(df, key_col).groupBy(key_col).applyInPandas(
-        _p, schema="key string, lag long, pacf double, conf_bound double"
+    return _per_series(
+        df, "key string, lag long, pacf double, conf_bound double",
+        [(_bound, None),
+         (lambda y: {"pacf": fit_ar(y, max_lag).coefficients},
+          {"pacf": np.full(max_lag, np.nan)})],
+        key_col, order_col, [value_col],
     )

@@ -180,11 +180,16 @@ def _add_trend(X: np.ndarray, regression: str) -> np.ndarray:
 
 def adf_test(y: np.ndarray, max_lag: int, regression: str = "c"):
     """Augmented Dickey-Fuller; returns (stat, MacKinnon p-value)
-    (``:209-242``). Regression of Δy_t on y_{t−1} and Δy lags."""
+    (``:209-242``). Regression of Δy_t on y_{t−1} and Δy lags. (nan, nan)
+    when the regression has no residual degrees of freedom (no more
+    observations than regressors), at any series length."""
     y = np.asarray(y, dtype=float)
     dy = np.diff(y)
     n = len(dy)
     n_obs = n - max_lag
+    n_trend = {"c": 1, "ct": 2, "ctt": 3}.get(regression, 0)
+    if n_obs <= 1 + max_lag + n_trend:
+        return float("nan"), float("nan")
     # design: col0 = level y_{t-1}, cols 1..maxLag = Δy lags
     cols = [y[len(y) - n_obs - 1 : len(y) - 1][:, None]]
     for k in range(1, max_lag + 1):

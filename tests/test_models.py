@@ -299,6 +299,17 @@ def test_adf_stationary_vs_random_walk():
     assert p_w > 0.10  # cannot reject unit root
     assert stat_s < stat_w
 
+    # 3 to 7 points: (nan, nan) exactly while the regression has no residual
+    # degrees of freedom (n − 1 − max_lag observations vs 1 + max_lag + trend
+    # regressors), a finite statistic once it has one
+    for regression, n_trend in (("nc", 0), ("c", 1), ("ct", 2)):
+        for n in range(3, 8):
+            stat, p = adf_test(walk[:n], 1, regression)
+            if n - 2 <= 2 + n_trend:
+                assert np.isnan(stat) and np.isnan(p), (regression, n, stat, p)
+            else:
+                assert np.isfinite(stat) and np.isfinite(p), (regression, n, stat, p)
+
 
 def test_kpss_level_stationary():
     rng = np.random.default_rng(23)
@@ -390,17 +401,88 @@ def test_model_name_aliases():
     (r4 ADVICE), and typos still fail fast."""
     import pytest
 
-    from spark_timeseries_spark.models.fit import (
-        _KNOWN_MODELS,
-        _KNOWN_TESTS,
-        _require,
-    )
+    from spark_timeseries_spark.models.fit import _MODELS, _TESTS, _require
 
-    assert _require("holt_winters", _KNOWN_MODELS) == "holtwinters"
-    assert _require("holtwinters", _KNOWN_MODELS) == "holtwinters"
-    assert _require("ljungbox", _KNOWN_TESTS) == "ljung_box"
+    assert _require("holt_winters", _MODELS) == "holtwinters"
+    assert _require("holtwinters", _MODELS) == "holtwinters"
+    assert _require("ljungbox", _TESTS) == "ljung_box"
     with pytest.raises(ValueError, match="unknown model"):
-        _require("holt-winters", _KNOWN_MODELS)
+        _require("holt-winters", _MODELS)
+
+
+def test_model_table_starts_and_params(spark, monkeypatch):
+    """Every entry of the model table, on one seeded series: the start the
+    fit_improvement certificate scores is the point the fit's optimizer
+    starts from (and handing that start to the fit changes nothing), and
+    fit_models returns exactly the params of a direct fit_* call."""
+    import spark_timeseries_spark.models.arima as arima_mod
+    import spark_timeseries_spark.models.univariate as uni
+    from spark_timeseries_spark.models import fit_models
+    from spark_timeseries_spark.models.fit import _MODELS
+
+    rng = np.random.default_rng(11)
+    n = 96
+    y = (5.0 + np.sin(np.arange(n) * 2 * np.pi / 12)
+         + 0.2 * np.cumsum(rng.standard_normal(n)))
+
+    # the first (objective, x0) each optimizer is called with
+    calls = []
+
+    def recording(opt, x0_at):
+        def wrapped(f, *args, **kwargs):
+            calls.append((f, np.array(args[x0_at - 1], dtype=float)))
+            return opt(f, *args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(uni, "minimize_cg", recording(uni.minimize_cg, 2))
+    monkeypatch.setattr(uni, "nelder_mead", recording(uni.nelder_mead, 1))
+    monkeypatch.setattr(arima_mod, "nelder_mead", recording(arima_mod.nelder_mead, 1))
+
+    for name, e in _MODELS.items():
+        kw = dict(e.defaults)
+        plain = e.params(e.fit(y, kw, None))
+        if e.start is None:
+            continue
+        start = e.start(y, kw)
+        assert np.array_equal(e.params(e.fit(y, kw, start)), plain), name
+        if name == "arima_auto":
+            # the stepwise search scores ARIMA(0, d, 0) at its own d
+            assert (start.p, start.q, start.d) == (0, 0, int(plain[1])), name
+            continue
+        calls.clear()
+        e.fit(y, kw, None)
+        f, x0 = calls[0]
+        if name == "arima":
+            assert np.array_equal(x0, start.coefficients)
+        assert f(x0) == pytest.approx(e.objective(start, y), rel=1e-12), name
+
+    def fields(m, *names):
+        return [float(getattr(m, a)) for a in names]
+
+    ar = uni.fit_ar(y, 1)
+    ag = uni.fit_ar_garch(y)
+    auto = arima_mod.auto_fit(y)
+    direct = {
+        "ar": [ar.c, *ar.coefficients],
+        "ewma": fields(uni.fit_ewma(y), "smoothing"),
+        "ewma_grid": list(uni.fit_ewma_grid(y, 100)),
+        "garch": fields(uni.fit_garch(y), "omega", "alpha", "beta"),
+        "egarch": fields(uni.fit_egarch(y), "omega", "alpha", "gamma", "beta"),
+        "argarch": [ag.c, ag.phi,
+                    *fields(ag.garch, "omega", "alpha", "beta")],
+        "holtwinters": fields(uni.fit_holt_winters(y, 12), "alpha", "beta",
+                              "gamma", "sse_"),
+        "arima": list(arima_mod.fit_arima(y, 1, 0, 0).coefficients),
+        "arima_auto": [auto.p, auto.d, auto.q, *auto.coefficients],
+    }
+    assert set(direct) == set(_MODELS)
+    df = spark.createDataFrame(
+        [("s", t, float(v)) for t, v in enumerate(y)],
+        "key string, loc long, value double",
+    )
+    for name, want in direct.items():
+        (row,) = fit_models(df, name).collect()
+        assert row.params == [float(v) for v in want], name
 
 
 def test_series_suite_normalizes_aliases(spark):

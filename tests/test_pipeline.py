@@ -423,6 +423,18 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(chain, max_iter=2)
 
+    # a NULL endpoint names no document: both paths drop that pair
+    null_pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 4)], "id_a long, id_b long"
+    )
+    local = {r.id: r.component
+             for r in dd.connected_components(null_pairs).collect()}
+    monkeypatch.setattr(dd, "DRIVER_EDGE_ROWS", 0)
+    dist_df = dd.connected_components(null_pairs)
+    dist = {r.id: r.component for r in dist_df.collect()}
+    dist_df.unpersist()
+    assert local == dist == {1: 1, 2: 1, 3: 1}
+
 
 def test_connected_components_and_representatives(spark):
     """A~B, B~C chain is ONE cluster even though A~C never paired; the

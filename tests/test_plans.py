@@ -243,7 +243,7 @@ def test_instant_filters_trigger_no_job_on_construction(spark, grid, monkeypatch
 
 def test_model_fit_single_exchange(spark, grid):
     """Grouped-map model stages must add exactly ONE exchange (the explicit
-    _spread repartition that defeats AQE's serialize-the-Python-stage
+    spread_kernel repartition that defeats AQE's serialize-the-Python-stage
     coalescing) — no hidden ENSURE_REQUIREMENTS shuffle on top."""
     from spark_timeseries_spark.models import fit_models
 

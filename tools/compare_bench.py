@@ -5,7 +5,9 @@ Usage::
     python -m tools.compare_bench baseline.json closing.json [--top N]
 
 Prints total/geomean speedup over the common rows plus the biggest movers
-in both directions.
+in both directions. Exits non-zero with a message when no ratio can be
+formed: no rows in common, common rows that sum to 0 (none timed in both
+files), or an "after" total of 0.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import sys
 
 
 def main():
@@ -28,11 +31,18 @@ def main():
     common = sorted(set(bq) & set(aq))
     ratios = {}
     for q in common:
-        if aq[q] > 0:
+        if aq[q] > 0 and bq[q] > 0:
             ratios[q] = bq[q] / aq[q]
-    geo = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
+    if not ratios:
+        sys.exit(
+            f"compare_bench: {len(common)} rows in common, none timed above 0 "
+            "in both files; nothing to compare"
+        )
+    if not a["value"]:
+        sys.exit(f"compare_bench: {args.after} reports a total of 0")
     tb = sum(bq[q] for q in common)
     ta = sum(aq[q] for q in common)
+    geo = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
     print(f"totals (reported): {b['value']} -> {a['value']}  "
           f"({b['value'] / a['value']:.3f}x)")
     print(f"common rows: {len(common)}  sum {tb:.1f} -> {ta:.1f} "
