@@ -3187,7 +3187,7 @@ def _q_rsi(spark, sf_dir):
 
     grid = _daily_grid(spark, sf_dir)
     filled = fill_ops.fill_next(fill_ops.fill_previous(fill_ops.fill_linear(grid)))
-    out = rsi(filled, 14, max_len=31)
+    out = rsi(filled, 14, method="closed")
     return out.select(
         "key", "loc",
         _stable_round(F.col("avg_gain"), 6).alias("avg_gain"),
@@ -3204,7 +3204,7 @@ def _q_macd(spark, sf_dir):
 
     grid = _daily_grid(spark, sf_dir)
     filled = fill_ops.fill_next(fill_ops.fill_previous(fill_ops.fill_linear(grid)))
-    out = macd(filled, max_len=31)
+    out = macd(filled, method="closed")
     return out.select(
         "key", "loc",
         _stable_round(F.col("macd"), 6).alias("macd"),
@@ -3490,7 +3490,7 @@ def _q_adx(spark, sf_dir):
     from spark_timeseries_spark.operators.resample import ohlc
 
     obs = events_observations(spark, sf_dir)
-    out = adx(ohlc(obs, "day"), n=14, max_len=31)
+    out = adx(ohlc(obs, "day"), n=14, method="closed")
     return out.select(
         "key", "bar_ts",
         _stable_round(F.col("tr"), 6).alias("tr"),
@@ -3838,7 +3838,7 @@ def _q_ewm_var(spark, sf_dir):
 
     grid = _daily_grid(spark, sf_dir)
     filled = fill_ops.fill_next(fill_ops.fill_previous(fill_ops.fill_linear(grid)))
-    out = ewm_var(filled, 0.25, max_len=31)
+    out = ewm_var(filled, 0.25, method="closed")
     return out.select(
         "key", "loc",
         _stable_round(F.col("ewm_mean"), 6).alias("ewm_mean"),
@@ -3908,7 +3908,7 @@ def _q_atr(spark, sf_dir):
     from spark_timeseries_spark.operators.resample import ohlc
 
     obs = events_observations(spark, sf_dir)
-    out = atr(ohlc(obs, "day"), n=14, max_len=31)
+    out = atr(ohlc(obs, "day"), n=14, method="closed")
     return out.select(
         "key", "bar_ts",
         _stable_round(F.col("tr"), 6).alias("tr"),
@@ -4038,7 +4038,7 @@ def _q_keltner(spark, sf_dir):
     from spark_timeseries_spark.operators.resample import ohlc
 
     obs = events_observations(spark, sf_dir)
-    out = keltner_channels(ohlc(obs, "day"), n=20, mult=2.0, max_len=31)
+    out = keltner_channels(ohlc(obs, "day"), n=20, mult=2.0, method="closed")
     return out.select(
         "key", "bar_ts",
         _stable_round(F.col("typical"), 6).alias("typical"),
@@ -4126,7 +4126,7 @@ def _q_ewma_chart(spark, sf_dir):
 
     grid = _daily_grid(spark, sf_dir)
     filled = fill_ops.fill_next(fill_ops.fill_previous(fill_ops.fill_linear(grid)))
-    out = ewma_chart(filled, alpha=0.2, limit=3.0, max_len=31)
+    out = ewma_chart(filled, alpha=0.2, limit=3.0, method="closed")
     return out.select(
         "key", "loc",
         _stable_round(F.col("ema"), 6).alias("ema"),
@@ -4272,7 +4272,7 @@ def _q_trix(spark, sf_dir):
 
     grid = _daily_grid(spark, sf_dir)
     filled = fill_ops.fill_next(fill_ops.fill_previous(fill_ops.fill_linear(grid)))
-    out = trix(filled, n=8, max_len=31)
+    out = trix(filled, n=8, method="closed")
     return out.select(
         "key", "loc",
         _stable_round(F.col("ema3"), 6).alias("ema3"),
@@ -4575,7 +4575,7 @@ def _q_heikin_ashi(spark, sf_dir):
     from spark_timeseries_spark.operators.resample import ohlc
 
     obs = events_observations(spark, sf_dir)
-    out = heikin_ashi(ohlc(obs, "day"), max_len=31)
+    out = heikin_ashi(ohlc(obs, "day"), method="closed")
     return out.select(
         "key", "bar_ts",
         _stable_round(F.col("ha_open"), 6).alias("ha_open"),

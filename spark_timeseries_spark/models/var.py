@@ -43,6 +43,28 @@ def _pivoted(df, keys, key_col, order_col, value_col):
     )
 
 
+def _grouped(df, keys, key_col, order_col, value_col, kern, schema):
+    """The named series' (loc × k) matrix — loc-sorted, rows with any
+    NaN dropped — through ``kern(mat)`` → output row tuples, in ONE
+    grouped map. A ``kern`` that raises (too-short or singular system)
+    yields no rows."""
+    wide = _pivoted(df, keys, key_col, order_col, value_col)
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def _k(pdf: pd.DataFrame) -> pd.DataFrame:
+        mat = pdf.sort_values(order_col)[list(keys)].to_numpy(dtype=float)
+        mat = mat[~np.isnan(mat).any(axis=1)]
+        try:
+            rows = kern(mat)
+        except Exception:
+            rows = []
+        return pd.DataFrame(rows, columns=names)
+
+    return wide.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
+        _k, schema=schema
+    )
+
+
 def _design(mat: np.ndarray, p: int):
     """(Y, X) for the VAR(p) OLS: Y rows t = p..n−1, X = [1, y_{t−1}…y_{t−p}]
     with lags ordered lag-major (all series at lag 1, then lag 2, …)."""
@@ -83,20 +105,10 @@ def fit_var(
     equation (``regressor='const'``, ``lag=0`` for the intercept)."""
     if p < 1:
         raise ValueError("p must be >= 1")
-    wide = _pivoted(df, keys, key_col, order_col, value_col)
-
-    def _k(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        mat = pdf[list(keys)].to_numpy(dtype=float)
-        mat = mat[~np.isnan(mat).any(axis=1)]
-        try:
-            rows, _ = _fit_kernel(mat, keys, p)
-        except Exception:
-            rows = []
-        return pd.DataFrame(rows, columns=["target", "regressor", "lag", "coef"])
-
-    return wide.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        _k, schema="target string, regressor string, lag int, coef double"
+    return _grouped(
+        df, keys, key_col, order_col, value_col,
+        lambda mat: _fit_kernel(mat, keys, p)[0],
+        "target string, regressor string, lag int, coef double",
     )
 
 
@@ -117,40 +129,31 @@ def impulse_response(
     residual covariance Cholesky, which callers can apply to these)."""
     if h < 0:
         raise ValueError("h must be >= 0")
-    wide = _pivoted(df, keys, key_col, order_col, value_col)
     k = len(keys)
 
-    def _k(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        mat = pdf[list(keys)].to_numpy(dtype=float)
-        mat = mat[~np.isnan(mat).any(axis=1)]
-        out = {"shock": [], "response": [], "step": [], "irf": []}
-        try:
-            _, beta = _fit_kernel(mat, keys, p)
-            # A_lag: k×k with [i, j] = effect of series j's lag on series i
-            A = [
-                beta[1 + (lag - 1) * k : 1 + lag * k, :].T
-                for lag in range(1, p + 1)
-            ]
-            psi = [np.eye(k)]
-            for s in range(1, h + 1):
-                acc = np.zeros((k, k))
-                for j in range(1, min(s, p) + 1):
-                    acc += A[j - 1] @ psi[s - j]
-                psi.append(acc)
-            for s, m in enumerate(psi):
-                for i, resp in enumerate(keys):
-                    for j, shock in enumerate(keys):
-                        out["shock"].append(shock)
-                        out["response"].append(resp)
-                        out["step"].append(s)
-                        out["irf"].append(float(m[i, j]))
-        except Exception:
-            pass
-        return pd.DataFrame(out)
+    def _irf(mat):
+        _, beta = _fit_kernel(mat, keys, p)
+        # A_lag: k×k with [i, j] = effect of series j's lag on series i
+        A = [
+            beta[1 + (lag - 1) * k : 1 + lag * k, :].T
+            for lag in range(1, p + 1)
+        ]
+        psi = [np.eye(k)]
+        for s in range(1, h + 1):
+            acc = np.zeros((k, k))
+            for j in range(1, min(s, p) + 1):
+                acc += A[j - 1] @ psi[s - j]
+            psi.append(acc)
+        return [
+            (shock, resp, s, float(m[i, j]))
+            for s, m in enumerate(psi)
+            for i, resp in enumerate(keys)
+            for j, shock in enumerate(keys)
+        ]
 
-    return wide.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        _k, schema="shock string, response string, step int, irf double"
+    return _grouped(
+        df, keys, key_col, order_col, value_col, _irf,
+        "shock string, response string, step int, irf double",
     )
 
 
@@ -168,31 +171,23 @@ def forecast_var(
     observed rows (forecasts feed back in, the standard recursion)."""
     if h < 1:
         raise ValueError("h must be >= 1")
-    wide = _pivoted(df, keys, key_col, order_col, value_col)
 
-    def _k(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        mat = pdf[list(keys)].to_numpy(dtype=float)
-        mat = mat[~np.isnan(mat).any(axis=1)]
-        out = {"key": [], "step": [], "forecast": []}
-        try:
-            _, beta = _fit_kernel(mat, keys, p)
-            hist = mat[-p:].copy()
-            k = len(keys)
-            for step in range(1, h + 1):
-                x = np.concatenate(
-                    [[1.0]] + [hist[-lag] for lag in range(1, p + 1)]
-                )
-                nxt = x @ beta
-                hist = np.vstack([hist, nxt])[-p:] if p > 1 else nxt[None, :]
-                for j, key in enumerate(keys):
-                    out["key"].append(key)
-                    out["step"].append(step)
-                    out["forecast"].append(float(nxt[j]))
-        except Exception:
-            pass
-        return pd.DataFrame(out)
+    def _forecast(mat):
+        _, beta = _fit_kernel(mat, keys, p)
+        hist = mat[-p:].copy()
+        rows = []
+        for step in range(1, h + 1):
+            x = np.concatenate(
+                [[1.0]] + [hist[-lag] for lag in range(1, p + 1)]
+            )
+            nxt = x @ beta
+            hist = np.vstack([hist, nxt])[-p:] if p > 1 else nxt[None, :]
+            rows += [
+                (key, step, float(nxt[j])) for j, key in enumerate(keys)
+            ]
+        return rows
 
-    return wide.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        _k, schema="key string, step int, forecast double"
+    return _grouped(
+        df, keys, key_col, order_col, value_col, _forecast,
+        "key string, step int, forecast double",
     )

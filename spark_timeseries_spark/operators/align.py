@@ -25,20 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..frequencies import DayFrequency, DurationFrequency, WeekFrequency
 from ..index import DateTimeIndex, UniformDateTimeIndex
-from .resample import MAP_GRID_MAX_INSTANTS
-
-
-def _uniform_step_us(index: UniformDateTimeIndex) -> int | None:
-    f = index.freq
-    if isinstance(f, DurationFrequency):
-        return f.nanos // 1000
-    if isinstance(f, DayFrequency):
-        return f.days * 86_400_000_000
-    if isinstance(f, WeekFrequency):
-        return f.weeks * 7 * 86_400_000_000
-    return None
+from .resample import _to_grid, _uniform_step_us
 
 
 def loc_expr(ts: Column, index: DateTimeIndex) -> Column | None:
@@ -136,56 +124,17 @@ def from_observations(
         ),
         index,
     )
-    if not dense:
-        obs = (
-            located.where(F.col("loc").isNotNull())
-            .groupBy("key", "loc")
-            .agg(agg_value.alias("value"))
-        )
-        idx = index.to_df(df.sparkSession)
-        return obs.join(F.broadcast(idx), "loc").select("key", "loc", "ts", "value")
-    if (
-        keys_df is None
-        and duplicates != "fail"
-        and len(index) <= MAP_GRID_MAX_INSTANTS
-    ):
-        # One-pass dense grid (see resample.resample): aggregate WITHOUT
-        # the loc filter so all-out-of-index keys keep their all-NULL
-        # series, fold each key's cells into a loc→value map, emit
-        # per_key × broadcast(index) with a map lookup. One data pass, no
-        # second keys scan, no (key, loc) grid join. duplicates="fail" is
-        # routed to the classic path below: its raise_error aggregate
-        # must never see the unfiltered loc-NULL group (out-of-index
-        # duplicates do not raise, by contract).
-        binned_all = located.groupBy("key", "loc").agg(
-            agg_value.alias("value")
-        )
-        per_key = binned_all.groupBy("key").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(
-                        F.col("loc").isNotNull(),
-                        F.struct("loc", "value"),
-                    )
-                )
-            ).alias("_cells")
-        )
-        grid = per_key.crossJoin(F.broadcast(index.to_df(df.sparkSession)))
-        return grid.select(
-            "key", "loc", "ts", F.col("_cells")[F.col("loc")].alias("value")
-        )
-    obs = (
-        located.where(F.col("loc").isNotNull())
-        .groupBy("key", "loc")
-        .agg(agg_value.alias("value"))
+    # duplicates="fail" takes the classic dense path: its raise_error
+    # aggregate must never see the unfiltered loc-NULL group
+    # (out-of-index duplicates do not raise, by contract)
+    return _to_grid(
+        located, agg_value.alias("value"), index, "key", "value", dense,
+        None if keys_df is None
+        else keys_df.select(
+            F.col(keys_df.columns[0]).cast("string").alias("key")
+        ),
+        map_ok=duplicates != "fail",
     )
-    keys = (
-        keys_df.select(F.col(keys_df.columns[0]).cast("string").alias("key"))
-        if keys_df is not None
-        else df.select(F.col(key_col).cast("string").alias("key"))
-    ).distinct()
-    grid = keys.crossJoin(F.broadcast(index.to_df(df.sparkSession)))
-    return grid.join(obs, ["key", "loc"], "left").select("key", "loc", "ts", "value")
 
 
 def with_index(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import by_length, spread_kernel
+
 __all__ = [
     "ts_features",
     "detect_seasonality",
@@ -63,6 +65,11 @@ __all__ = [
     "acf_features",
     "seasonal_zscore",
 ]
+
+#: :func:`sample_entropy` ``method="auto"`` bound, read when the plan is
+#: built: series of at most this many points take the template self-join,
+#: longer ones the in-core kernel.
+SAMPLE_ENTROPY_JOIN_MAX_N = 512
 
 
 def ts_features(
@@ -211,7 +218,6 @@ def detect_seasonality(
 def spectral_entropy(
     df: DataFrame,
     method: str = "auto",
-    fft_threshold: int | None = None,
     key_col: str = "key",
     order_col: str = "loc",
     value_col: str = "value",
@@ -221,16 +227,14 @@ def spectral_entropy(
     ordinates (tsfeatures' ``entropy``) — ≈1 for white noise (flat
     spectrum, hard to forecast), →0 for a pure cycle (all power in one
     bin, easy). Composes :func:`~spark_timeseries_spark.operators.spectral.periodogram`
-    (inheriting its explode/FFT auto-routing) with one per-key aggregate:
+    (inheriting its explode/FFT auto-routing, bound
+    ``spectral.PERIODOGRAM_EXPLODE_MAX_N``) with one per-key aggregate:
     Σ p̂ ln p̂ = (ln S − Σ p ln p / S) with S = Σ p, so no second pass.
     Degenerate series (zero total power, i.e. constant; or a single
     frequency bin) yield NULL."""
-    from .spectral import _FFT_THRESHOLD, periodogram
+    from .spectral import periodogram
 
-    per = periodogram(
-        df, key_col, order_col, value_col, method,
-        fft_threshold if fft_threshold is not None else _FFT_THRESHOLD,
-    )
+    per = periodogram(df, key_col, order_col, value_col, method)
     p = F.col("power")
     agg = per.groupBy(key_col).agg(
         F.sum(p).alias("_S"),
@@ -635,7 +639,6 @@ def sample_entropy(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    kernel_threshold: int = 512,
 ) -> DataFrame:
     """Sample entropy (Richman & Moorman 2000) per series → (key, n, b,
     a, sampen): B = #template pairs (i < j) of length ``m`` within
@@ -649,15 +652,14 @@ def sample_entropy(
     A = 0 or B = 0 → NULL sampen (undefined, the standard outcome on
     short/irregular series).
 
-    Dual plan (the periodogram/MK precedent): template self-join below
-    ``kernel_threshold`` points (SQL-oracle-replayable; O(n²) shuffled
-    pair rows per series), grouped-map numpy kernel above it (blocked
-    O(n²) Chebyshev comparisons IN-CORE — the quadratic stays as BLAS-
-    style flops, zero pair shuffle)."""
+    Dual plan (``parallel.by_length``, ``method="auto"``): template
+    self-join up to :data:`SAMPLE_ENTROPY_JOIN_MAX_N` points (SQL-
+    oracle-replayable; O(n²) shuffled pair rows per series), grouped-map
+    numpy kernel above it (blocked O(n²) Chebyshev comparisons IN-CORE —
+    the quadratic stays as BLAS-style flops, zero pair shuffle);
+    "join"/"kernel" force one."""
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    if method not in ("auto", "join", "kernel"):
-        raise ValueError(f"method must be auto|join|kernel, got {method}")
     v = F.col(value_col)
     pts = df.where(v.isNotNull()).select(
         key_col, F.col(order_col).alias("_l"), v.alias("_v")
@@ -748,20 +750,14 @@ def sample_entropy(
                  "b": [bcnt], "a": [acnt]}
             )
 
-        from ..parallel import spread_kernel
-
         return spread_kernel(src, key_col).groupBy(key_col).applyInPandas(
             kern, f"`{key_col}` {kt}, n long, b long, a long"
         )
 
-    if method == "join":
-        counts = _join_plan(base)
-    elif method == "kernel":
-        counts = _kernel_plan(base)
-    else:
-        counts = _join_plan(
-            base.where(F.col("_n") <= kernel_threshold)
-        ).unionByName(_kernel_plan(base.where(F.col("_n") > kernel_threshold)))
+    counts = by_length(
+        base, "_n", SAMPLE_ENTROPY_JOIN_MAX_N, method,
+        _join_plan, _kernel_plan, ("join", "kernel"),
+    )
     # anchor on every series with ≥1 valid point (the theil_sen anchor
     # pattern): the join plan emits NO row when a series has <2 valid
     # m-templates while the kernel emits (n, 0, 0, NULL) — without the

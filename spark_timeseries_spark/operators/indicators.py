@@ -16,9 +16,10 @@ grows geometrically, so the closed form is only finite for series
 shorter than ``≈ 250 / −log10(q)`` points (α = 0.3 → ~1900 points;
 α = 2/27 (EMA-26) → ~7400). Above that per-series length the ``auto``
 method routes the series to a grouped-map numpy kernel running the
-plain O(n) recursion in-core — the periodogram dual-plan precedent:
+plain O(n) recursion in-core (``parallel.by_length``):
 SQL-oracle-replayable closed form for short series, zero-pair-shuffle
-kernel for long ones, selected lazily per series.
+kernel for long ones, selected lazily per series. The bound is derived,
+not set: :func:`_ema_safe_len` of the chain's alphas (:func:`_ema_chain`).
 
 NULL cells are skipped everywhere: the EMA/indicator advances over the
 observed subsequence (output rows = input non-null rows).
@@ -32,6 +33,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..parallel import by_length, spread_kernel
 
 __all__ = [
     "ema", "macd", "rsi", "bollinger", "adx",
@@ -93,8 +96,6 @@ def _ema_kernel(df, alpha, key_col, order_col, value_col, out_col):
         pdf[out_col] = e
         return pdf
 
-    from ..parallel import spread_kernel
-
     return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
         kern, f"{fields}, `{out_col}` double"
     )
@@ -108,12 +109,9 @@ def _ema_col(
     value_col: str,
     out_col: str,
     method: str,
-    max_len: int | None = None,
 ) -> DataFrame:
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if method not in ("auto", "closed", "kernel"):
-        raise ValueError(f"method must be auto|closed|kernel, got {method}")
+    """One EMA pass with the forced ``method`` ("closed" or "kernel");
+    routing is :func:`_ema_chain`'s."""
     pts = df.where(F.col(value_col).isNotNull())
     if alpha >= 1.0:
         # q = 0: the recursion degenerates to e_t = v_t exactly (any
@@ -122,56 +120,41 @@ def _ema_col(
         return pts.withColumn(out_col, F.col(value_col).cast("double"))
     if method == "closed":
         return _ema_closed(pts, alpha, key_col, order_col, value_col, out_col)
-    if method == "kernel":
-        return _ema_kernel(pts, alpha, key_col, order_col, value_col, out_col)
-    cap = _ema_safe_len(alpha)
-    if max_len is not None and max_len <= cap:
-        # caller vouches every series fits the closed form's envelope:
-        # skip the routing count window entirely (it costs a full extra
-        # window pass even when every series is short)
-        return _ema_closed(pts, alpha, key_col, order_col, value_col, out_col)
-    wn = Window.partitionBy(key_col)
-    ptsn = pts.withColumn("_gn", F.count(F.lit(1)).over(wn))
-    short = _ema_closed(
-        ptsn.where(F.col("_gn") <= cap).drop("_gn"),
-        alpha, key_col, order_col, value_col, out_col,
-    )
-    long_ = _ema_kernel(
-        ptsn.where(F.col("_gn") > cap).drop("_gn"),
-        alpha, key_col, order_col, value_col, out_col,
-    )
-    return short.unionByName(long_)
+    return _ema_kernel(pts, alpha, key_col, order_col, value_col, out_col)
 
 
-def _ema_chain(df, key_col, alphas, chain, method, max_len):
-    """Route a CHAIN of EMA passes with ONE per-series length decision.
+def _ema_chain(df, key_col, alphas, chain, method):
+    """Route a CHAIN of EMA passes with ONE per-series length decision —
+    the one EMA router; a single pass is a chain of one.
 
     ``chain(d, m)`` must apply every pass with the forced method ``m``.
     Before r15, ``method="auto"`` routed inside each ``_ema_col`` call:
     every pass planned a closed+kernel Union over its whole input, so
     chained passes DOUBLED the subplan each time — adx's four chained
     EMAs planned a 16×-duplicated tree costing ~5 s of pure driver
-    analysis/optimizer time before a task ran (the r14 entry rows dodged
-    it only by caller vouches). Splitting ONCE on the chain's tightest
-    envelope (min closed-form cap over the chain's alphas, with count(*)
-    per key as a conservative series-length bound) keeps both branches
-    LINEAR: one Union total, 2 upstream copies instead of 2^n.
+    analysis/optimizer time before a task ran. Splitting ONCE
+    (``parallel.by_length``) on the chain's tightest envelope (min
+    :func:`_ema_safe_len` over the chain's alphas, with count(*) per key
+    as a conservative series-length bound) keeps both branches LINEAR:
+    one Union total, 2 upstream copies instead of 2^n.
 
     A series whose length lands between a per-pass cap and the chain cap
-    now takes the kernel for every pass instead of the closed form for
-    some; both implement the identical adjust=False recursion (floats
-    may differ in the last bits between the two exact forms — the same
+    takes the kernel for every pass instead of the closed form for some;
+    both implement the identical adjust=False recursion (floats may
+    differ in the last bits between the two exact forms — the same
     closed-vs-kernel seam auto always had, moved a few lengths down)."""
-    if method != "auto":
-        return chain(df, method)
-    cap = min(_ema_safe_len(a) for a in alphas)
-    if max_len is not None and max_len <= cap:
-        return chain(df, "closed")
-    wn = Window.partitionBy(key_col)
-    d = df.withColumn("_gn", F.count(F.lit(1)).over(wn))
-    short = chain(d.where(F.col("_gn") <= cap).drop("_gn"), "closed")
-    long_ = chain(d.where(F.col("_gn") > cap).drop("_gn"), "kernel")
-    return short.unionByName(long_)
+    for a in alphas:
+        if not 0.0 < a <= 1.0:
+            raise ValueError(f"alpha must be in (0, 1], got {a}")
+    d = df.withColumn(
+        "_gn", F.count(F.lit(1)).over(Window.partitionBy(key_col))
+    )
+    return by_length(
+        d, "_gn", min(_ema_safe_len(a) for a in alphas), method,
+        lambda src: chain(src.drop("_gn"), "closed"),
+        lambda src: chain(src.drop("_gn"), "kernel"),
+        ("closed", "kernel"),
+    )
 
 
 def ema(
@@ -181,18 +164,19 @@ def ema(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Input rows (non-null cells) + ``ema`` — the adjust=False
     exponential moving average seeded at the series' first observation.
     ``method``: "auto" routes per series by length (closed window form
-    within its numeric envelope, grouped-map recursion beyond — see
-    module docstring); "closed"/"kernel" force one. ``max_len``: a
-    caller guarantee that no series exceeds it — when it fits the
-    closed form's envelope, auto skips the per-series routing count
-    window (one whole window pass saved on short-series corpora)."""
-    return _ema_col(
-        df, alpha, key_col, order_col, value_col, "ema", method, max_len
+    within its numeric envelope :func:`_ema_safe_len`, grouped-map
+    recursion beyond — see module docstring); "closed"/"kernel" force
+    one."""
+    return _ema_chain(
+        df, key_col, (alpha,),
+        lambda d, m: _ema_col(
+            d, alpha, key_col, order_col, value_col, "ema", m
+        ),
+        method,
     )
 
 
@@ -205,7 +189,6 @@ def macd(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """MACD (Appel): input rows + ``macd`` (EMA_fast − EMA_slow, span
     αs = 2/(n+1)), ``signal`` (EMA of the macd line), ``histogram``
@@ -218,14 +201,14 @@ def macd(
     a_sig = 2.0 / (signal + 1)
 
     def _chain(d, m):
-        d = _ema_col(d, a_fast, key_col, order_col, value_col, "_ef", m, max_len)
-        d = _ema_col(d, a_slow, key_col, order_col, value_col, "_es", m, max_len)
+        d = _ema_col(d, a_fast, key_col, order_col, value_col, "_ef", m)
+        d = _ema_col(d, a_slow, key_col, order_col, value_col, "_es", m)
         d = d.withColumn("macd", F.col("_ef") - F.col("_es")).drop("_ef", "_es")
-        d = _ema_col(d, a_sig, key_col, order_col, "macd", "signal", m, max_len)
+        d = _ema_col(d, a_sig, key_col, order_col, "macd", "signal", m)
         return d.withColumn("histogram", F.col("macd") - F.col("signal"))
 
     return _ema_chain(
-        df, key_col, (a_fast, a_slow, a_sig), _chain, method, max_len
+        df, key_col, (a_fast, a_slow, a_sig), _chain, method
     )
 
 
@@ -236,7 +219,6 @@ def rsi(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Relative Strength Index → per non-first observation:
     ``gain``/``loss`` (positive/negative part of the one-step change),
@@ -262,8 +244,8 @@ def rsi(
     alpha = 1.0 / n
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, "gain", "avg_gain", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "loss", "avg_loss", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, "gain", "avg_gain", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "loss", "avg_loss", m)
         return dd.withColumn(
             "rsi",
             100.0
@@ -272,7 +254,7 @@ def rsi(
             ),
         )
 
-    return _ema_chain(d, key_col, (alpha,), _chain, method, max_len)
+    return _ema_chain(d, key_col, (alpha,), _chain, method)
 
 
 def bollinger(
@@ -323,7 +305,6 @@ def adx(
     low_col: str = "low",
     close_col: str = "close",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Wilder's Average Directional Index over OHLC bars → one row per
     bar from the SECOND onward (the first has no previous bar):
@@ -377,9 +358,9 @@ def adx(
     minus_di = 100.0 * F.try_divide(F.col("_smdm"), F.col("_str"))
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, "_pdm", "_spdm", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_mdm", "_smdm", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "tr", "_str", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_pdm", "_spdm", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_mdm", "_smdm", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "tr", "_str", m)
         dd = (
             dd.withColumn("plus_di", plus_di)
             .withColumn("minus_di", minus_di)
@@ -393,9 +374,9 @@ def adx(
             )
             .drop("_pdm", "_mdm", "_spdm", "_smdm", "_str")
         )
-        return _ema_col(dd, alpha, key_col, order_col, "dx", "adx", m, max_len)
+        return _ema_col(dd, alpha, key_col, order_col, "dx", "adx", m)
 
-    return _ema_chain(d, key_col, (alpha,), _chain, method, max_len)
+    return _ema_chain(d, key_col, (alpha,), _chain, method)
 
 
 def stochastic(
@@ -476,7 +457,6 @@ def ewm_var(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Input rows (non-null cells) + ``ewm_mean``, ``ewm_var``,
     ``ewm_std`` — the exponentially-weighted variance under the SAME
@@ -497,15 +477,15 @@ def ewm_var(
     )
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "ewm_mean", m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_x2", "_e2", m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "ewm_mean", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_x2", "_e2", m)
         return (
             dd.withColumn("ewm_var", var)
             .withColumn("ewm_std", F.sqrt(F.col("ewm_var")))
             .drop("_x2", "_e2")
         )
 
-    return _ema_chain(d, key_col, (alpha,), _chain, method, max_len)
+    return _ema_chain(d, key_col, (alpha,), _chain, method)
 
 
 def atr(
@@ -517,7 +497,6 @@ def atr(
     low_col: str = "low",
     close_col: str = "close",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Average True Range (Wilder) over OHLC bars → one row per bar
     from the SECOND onward: ``tr`` (max of H−L, |H−prevC|, |L−prevC|)
@@ -543,7 +522,13 @@ def atr(
         )
         .drop("_pc")
     )
-    return _ema_col(d, 1.0 / n, key_col, order_col, "tr", "atr", method, max_len)
+    return _ema_chain(
+        d, key_col, (1.0 / n,),
+        lambda dd, m: _ema_col(
+            dd, 1.0 / n, key_col, order_col, "tr", "atr", m
+        ),
+        method,
+    )
 
 
 def pivot_points(
@@ -583,7 +568,6 @@ def keltner_channels(
     low_col: str = "low",
     close_col: str = "close",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Keltner channels over OHLC bars → one row per bar from the
     SECOND onward (the first has no true range): ``typical``
@@ -609,8 +593,8 @@ def keltner_channels(
     )
     def _chain(dd, m):
         dd = _ema_col(dd, 2.0 / (n + 1), key_col, order_col, "typical",
-                      "kc_mid", m, max_len)
-        dd = _ema_col(dd, 1.0 / n, key_col, order_col, "tr", "_atr", m, max_len)
+                      "kc_mid", m)
+        dd = _ema_col(dd, 1.0 / n, key_col, order_col, "tr", "_atr", m)
         return (
             dd.withColumn("kc_upper", F.col("kc_mid") + mult * F.col("_atr"))
             .withColumn("kc_lower", F.col("kc_mid") - mult * F.col("_atr"))
@@ -618,7 +602,7 @@ def keltner_channels(
         )
 
     return _ema_chain(
-        d, key_col, (2.0 / (n + 1), 1.0 / n), _chain, method, max_len
+        d, key_col, (2.0 / (n + 1), 1.0 / n), _chain, method
     )
 
 
@@ -742,7 +726,6 @@ def ewma_chart(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """EWMA control chart (Roberts 1959 / Lucas-Saccucci) per series →
     input non-null rows + ``ema``, ``center`` (the series mean — the
@@ -768,8 +751,13 @@ def ewma_chart(
     pts = df.where(v.isNotNull())
     wk = Window.partitionBy(key_col)
     ws = Window.partitionBy(key_col).orderBy(order_col)
-    d = _ema_col(pts, alpha, key_col, order_col, value_col, "ema",
-                 method, max_len)
+    d = _ema_chain(
+        pts, key_col, (alpha,),
+        lambda dd, m: _ema_col(
+            dd, alpha, key_col, order_col, value_col, "ema", m
+        ),
+        method,
+    )
     d = (
         d.withColumn("center", F.avg(value_col).over(wk))
         .withColumn("_sd", F.stddev_samp(value_col).over(wk))
@@ -925,7 +913,6 @@ def trix(
     order_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """TRIX (Hutson 1983) → input non-null rows + ``ema3`` (the
     triple-smoothed EMA, span α = 2/(n+1), adjust=False — three
@@ -944,12 +931,9 @@ def trix(
     prev = F.lag("ema3").over(ws)
 
     def _chain(dd, m):
-        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "_e1",
-                      m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_e1", "_e2",
-                      m, max_len)
-        dd = _ema_col(dd, alpha, key_col, order_col, "_e2", "ema3",
-                      m, max_len)
+        dd = _ema_col(dd, alpha, key_col, order_col, value_col, "_e1", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_e1", "_e2", m)
+        dd = _ema_col(dd, alpha, key_col, order_col, "_e2", "ema3", m)
         return (
             dd.withColumn(
                 "trix", 100.0 * (F.try_divide(F.col("ema3"), prev) - 1.0)
@@ -957,7 +941,7 @@ def trix(
             .drop("_e1", "_e2")
         )
 
-    return _ema_chain(pts, key_col, (alpha,), _chain, method, max_len)
+    return _ema_chain(pts, key_col, (alpha,), _chain, method)
 
 
 def aroon(
@@ -1007,7 +991,6 @@ def heikin_ashi(
     low_col: str = "low",
     close_col: str = "close",
     method: str = "auto",
-    max_len: int | None = None,
 ) -> DataFrame:
     """Heikin-Ashi smoothed candles → input rows + ``ha_open``,
     ``ha_close``, ``ha_high``, ``ha_low``: ha_close = (O+H+L+C)/4;
@@ -1034,8 +1017,13 @@ def heikin_ashi(
     w_in = F.coalesce(F.lag("ha_close").over(ws), seed)
     # "_ha_w", not "_w": the closed-form EMA pass uses "_w" internally
     d = d.withColumn("_ha_w", w_in)
-    d = _ema_col(d, 0.5, key_col, order_col, "_ha_w", "ha_open",
-                 method, max_len)
+    d = _ema_chain(
+        d, key_col, (0.5,),
+        lambda dd, m: _ema_col(
+            dd, 0.5, key_col, order_col, "_ha_w", "ha_open", m
+        ),
+        method,
+    )
     return (
         d.withColumn(
             "ha_high",

@@ -56,16 +56,23 @@ def _clamp(c: Column, lo: int, hi: int) -> Column:
     return F.greatest(F.lit(lo), F.least(F.lit(hi), c))
 
 
-def _counts_uniform(ts: Column, index: UniformDateTimeIndex):
-    """(n_lt, n_le) via O(1) epoch-micros arithmetic."""
+def _uniform_step_us(index: UniformDateTimeIndex) -> int | None:
+    """The index step in µs; None for calendar frequencies (no fixed
+    step)."""
     f = index.freq
     if isinstance(f, DurationFrequency):
-        step = f.nanos // 1000
-    elif isinstance(f, DayFrequency):
-        step = f.days * 86_400_000_000
-    elif isinstance(f, WeekFrequency):
-        step = f.weeks * 7 * 86_400_000_000
-    else:
+        return f.nanos // 1000
+    if isinstance(f, DayFrequency):
+        return f.days * 86_400_000_000
+    if isinstance(f, WeekFrequency):
+        return f.weeks * 7 * 86_400_000_000
+    return None
+
+
+def _counts_uniform(ts: Column, index: UniformDateTimeIndex):
+    """(n_lt, n_le) via O(1) epoch-micros arithmetic."""
+    step = _uniform_step_us(index)
+    if step is None:
         return None
     m = index.size
     start_us = index.start.value // 1000
@@ -137,68 +144,86 @@ def resample(
     agg_expr = (
         getattr(F, aggr)(value_col) if isinstance(aggr, str) else aggr
     ).alias(value_col)
-    if not dense:
-        binned = (
-            df.withColumn("loc", loc)
-            .where(F.col("loc").isNotNull())
-            .groupBy(key_col, "loc")
-            .agg(agg_expr)
-        )
-        idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-        return binned.join(idx_df, "loc").select(key_col, "loc", "ts", value_col)
-    if (
-        keys_df is None
-        and isinstance(aggr, str)
-        and len(target_index) <= MAP_GRID_MAX_INSTANTS
-    ):
-        # (caller-supplied Column aggregates are routed to the classic
-        # path: they may embed side-effecting expressions — raise_error
-        # validators — that must not see the unfiltered loc-NULL group)
-        # One-pass dense grid: aggregate WITHOUT the loc filter (so a key
-        # whose observations all fall outside the index still owns a
-        # group and survives as an all-NULL series — the documented key
-        # universe), fold each key's cells into a loc→value map, and
-        # emit the grid as per_key × broadcast(index) with a map lookup.
-        # Removes the second full-data scan (the old keys-from-df
-        # distinct) and the (key, loc) grid join + its exchanges; value
-        # per cell is the identical aggregate or NULL, exactly the old
-        # left join. Bounded by index length — a map of the whole index
-        # per key must stay row-sized; past the bound the classic
-        # grid-join path below handles billion-instant indices.
-        binned_all = df.withColumn("loc", loc).groupBy(key_col, "loc").agg(
-            agg_expr
-        )
-        per_key = binned_all.groupBy(key_col).agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(
-                        F.col("loc").isNotNull(),
-                        F.struct("loc", value_col),
-                    )
-                )
-            ).alias("_cells")
-        )
-        idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-        return per_key.crossJoin(idx_df).select(
-            key_col,
-            "loc",
-            "ts",
-            F.col("_cells")[F.col("loc")].alias(value_col),
-        )
-    binned = (
-        df.withColumn("loc", loc)
-        .where(F.col("loc").isNotNull())
-        .groupBy(key_col, "loc")
-        .agg(agg_expr)
+    # caller-supplied Column aggregates take the classic dense path: they
+    # may embed side-effecting expressions — raise_error validators —
+    # that must not see the unfiltered loc-NULL group
+    return _to_grid(
+        df.withColumn("loc", loc), agg_expr, target_index, key_col,
+        value_col, dense,
+        None if keys_df is None
+        else keys_df.select(F.col(keys_df.columns[0]).alias(key_col)),
+        map_ok=isinstance(aggr, str),
     )
-    keys = (
-        keys_df.select(F.col(keys_df.columns[0]).alias(key_col))
-        if keys_df is not None
-        else df.select(key_col)
-    ).distinct()
-    idx_df = F.broadcast(target_index.to_df(df.sparkSession))
-    grid = keys.crossJoin(idx_df)
-    return grid.join(binned, [key_col, "loc"], "left").select(
+
+
+def _to_grid(
+    located: DataFrame,
+    agg: Column,
+    index: DateTimeIndex,
+    key_col: str,
+    value_col: str,
+    dense: bool,
+    keys: DataFrame | None,
+    map_ok: bool,
+) -> DataFrame:
+    """``located`` (``key_col``, ``loc`` (NULL off-index), …) aggregated
+    per (key, loc) with ``agg`` (aliased ``value_col``) onto ``index`` →
+    ``(key, loc, ts, value)``; the one builder behind :func:`resample`
+    and ``align.from_observations``.
+
+    ``dense=False`` keeps only the observed cells. ``dense=True`` emits
+    one row per key×instant, NULL where nothing was observed, over the
+    key universe ``keys`` (one column ``key_col``) or, when None, the
+    keys of ``located``. A NULL key is one series like any other on
+    every path. Two dense plans, the same cells:
+
+    - **map grid** (``keys`` None, ``map_ok``, index of at most
+      :data:`MAP_GRID_MAX_INSTANTS` instants): aggregate WITHOUT the loc
+      filter (so a key whose observations all fall outside the index
+      still owns a group and survives as an all-NULL series), fold each
+      key's cells into a loc→value map, and emit per_key ×
+      broadcast(index) with a map lookup — one data pass, no second
+      keys scan, no (key, loc) grid join and its exchanges. A map of the
+      whole index per key must stay row-sized, hence the bound.
+    - **grid join** otherwise: keys × broadcast(index) left-joined to
+      the binned cells, null-safe on the key; scales to billion-instant
+      indices.
+    """
+    idx = F.broadcast(index.to_df(located.sparkSession))
+    map_ok = map_ok and keys is None and len(index) <= MAP_GRID_MAX_INSTANTS
+    if dense and map_ok:
+        per_key = (
+            located.groupBy(key_col, "loc")
+            .agg(agg)
+            .groupBy(key_col)
+            .agg(
+                F.map_from_entries(
+                    F.collect_list(
+                        F.when(
+                            F.col("loc").isNotNull(),
+                            F.struct("loc", value_col),
+                        )
+                    )
+                ).alias("_cells")
+            )
+        )
+        cell = F.col("_cells")[F.col("loc")].alias(value_col)
+        return per_key.crossJoin(idx).select(key_col, "loc", "ts", cell)
+    binned = (
+        located.where(F.col("loc").isNotNull())
+        .groupBy(key_col, "loc")
+        .agg(agg)
+    )
+    if not dense:
+        return binned.join(idx, "loc").select(key_col, "loc", "ts", value_col)
+    keys = (keys if keys is not None else located.select(key_col)).distinct()
+    cells = binned.select(
+        F.col(key_col).alias("_bk"), F.col("loc").alias("_bl"), value_col
+    )
+    on = F.col(key_col).eqNullSafe(F.col("_bk")) & (
+        F.col("loc") == F.col("_bl")
+    )
+    return keys.crossJoin(idx).join(cells, on, "left").select(
         key_col, "loc", "ts", value_col
     )
 

@@ -26,12 +26,14 @@ Two physical strategies for the same math, selected per series by length:
   the exact same angles (still no quadratic shuffle — the quadratic work
   stays in-core as BLAS flops).
 
-``method="auto"`` (default) branches PER SERIES inside one lazy plan:
-series with n ≤ ``fft_threshold`` take the explode subplan, longer ones
-the grouped-map subplan, unioned — no driver-side length probe, no
-action at plan-build time. The threshold default (512) keeps the explode
-side under ~128k shuffle rows per series; at 100× series length the
-kernel side takes over and shuffle volume stays linear in the corpus.
+``method="auto"`` (default) branches PER SERIES inside one lazy plan
+(``parallel.by_length``): series with n ≤ :data:`PERIODOGRAM_EXPLODE_MAX_N`
+take the explode subplan, longer ones the grouped-map subplan, unioned —
+no driver-side length probe, no action at plan-build time. The bound
+(512) keeps the explode side under ~128k shuffle rows per series; at
+100× series length the kernel side takes over and shuffle volume stays
+linear in the corpus. :func:`coherence` routes its overlap the same way
+on :data:`COHERENCE_EXPLODE_MAX_N`.
 
 Missing cells: the input should be FILLED first (``fill.fill_linear`` et
 al.) — a NULL cell is dropped from the sums, which is the "treat as the
@@ -46,12 +48,18 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..parallel import by_length, spread_kernel
+
 __all__ = [
     "periodogram", "dominant_period", "coherence", "lomb_scargle",
     "spectral_residual",
 ]
 
-_FFT_THRESHOLD = 512
+#: ``method="auto"`` bounds, read when the plan is built: a series
+#: (coherence: an overlap) of at most this many rows takes the explode
+#: plan, a longer one the FFT kernel.
+PERIODOGRAM_EXPLODE_MAX_N = 512
+COHERENCE_EXPLODE_MAX_N = 512
 
 
 def _periodogram_explode(pts: DataFrame, key_col, loc_col, value_col) -> DataFrame:
@@ -142,8 +150,6 @@ def _periodogram_fft(df: DataFrame, key_col, loc_col, value_col) -> DataFrame:
             }
         )
 
-    from ..parallel import spread_kernel
-
     return spread_kernel(df, key_col).groupBy(key_col).applyInPandas(
         kernel, schema
     )
@@ -155,10 +161,7 @@ def _periodogram_with_n(
     loc_col: str,
     value_col: str,
     method: str,
-    fft_threshold: int,
 ) -> DataFrame:
-    if method not in ("auto", "explode", "fft"):
-        raise ValueError(f"method must be auto|explode|fft, got {method}")
     v = F.col(value_col)
     stats = df.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("_n"), F.avg(v).alias("_mu")
@@ -166,23 +169,16 @@ def _periodogram_with_n(
     # _n >= 2 guard: sequence(1, 0) counts DOWN in Spark (default step -1),
     # so a 1-point series would emit spurious k=1,0 rows instead of none.
     joined = df.join(stats, key_col).where(F.col("_n") >= F.lit(2))
-    pts = joined.where(v.isNotNull())
-    if method == "explode":
-        return _periodogram_explode(pts, key_col, loc_col, value_col)
-    if method == "fft":
-        return _periodogram_fft(
-            joined.drop("_n", "_mu"), key_col, loc_col, value_col
-        ).where(F.col("_n") >= 2)
-    short = _periodogram_explode(
-        pts.where(F.col("_n") <= fft_threshold), key_col, loc_col, value_col
+    return by_length(
+        joined, "_n", PERIODOGRAM_EXPLODE_MAX_N, method,
+        lambda src: _periodogram_explode(
+            src.where(v.isNotNull()), key_col, loc_col, value_col
+        ),
+        lambda src: _periodogram_fft(
+            src.drop("_n", "_mu"), key_col, loc_col, value_col
+        ),
+        ("explode", "fft"),
     )
-    long_ = _periodogram_fft(
-        joined.where(F.col("_n") > fft_threshold).drop("_n", "_mu"),
-        key_col,
-        loc_col,
-        value_col,
-    )
-    return short.unionByName(long_.select(key_col, "k", "power", "_n"))
 
 
 def periodogram(
@@ -191,17 +187,16 @@ def periodogram(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """(key, k, power): periodogram ordinate at each Fourier frequency
     k = 1..⌊n/2⌋, where n is the series' grid length (rows per key) and
     t is the grid location — a spike at k means a cycle of period n/k
     grid steps. ``method``: "auto" (default) routes each series by length
-    — explode plan for n ≤ ``fft_threshold``, grouped-map FFT kernel
-    above it; "explode" / "fft" force one strategy (use "explode" for
-    SQL-oracle replay, "fft" when every series is long)."""
+    — explode plan for n ≤ :data:`PERIODOGRAM_EXPLODE_MAX_N`, grouped-map
+    FFT kernel above it; "explode" / "fft" force one strategy (use
+    "explode" for SQL-oracle replay, "fft" when every series is long)."""
     return _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
+        df, key_col, loc_col, value_col, method
     ).select(key_col, "k", "power")
 
 
@@ -212,7 +207,6 @@ def dominant_period(
     value_col: str = "value",
     tie_digits: int | None = None,
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """(key, k, period, power): the argmax-power Fourier frequency per
     series and its period n/k in grid steps (ties to the LOWEST k — the
@@ -225,9 +219,7 @@ def dominant_period(
     order noise then resolve by the deterministic lowest-k rule on every
     engine, instead of by whichever side's fp dust is larger.
     """
-    per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
-    )
+    per = _periodogram_with_n(df, key_col, loc_col, value_col, method)
     rank_p = (
         F.round(F.col("power"), tie_digits)
         if tie_digits is not None
@@ -338,7 +330,6 @@ def coherence(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Magnitude-squared coherence between two named series over their
     non-null overlap → (k, freq, sxx, syy, coh, phase): the frequency-
@@ -360,20 +351,18 @@ def coherence(
     overlap).
 
     Plan (``method="auto"``, the :func:`periodogram` dual-plan
-    precedent): short overlaps (T ≤ ``fft_threshold``) take the
-    SQL-exact T/2-way explode + one groupBy(k) — all JVM, oracle-
+    precedent): short overlaps (T ≤ :data:`COHERENCE_EXPLODE_MAX_N`) take
+    the SQL-exact T/2-way explode + one groupBy(k) — all JVM, oracle-
     replayable; long overlaps route to a grouped-map numpy ``rfft``
     kernel computing the SAME cross-spectrum from X_x·conj(X_y) in
     O(T log T) — the O(T²) explode never ships at long-series scale.
-    Both branches live in one lazy plan (a per-length filter + union;
-    no driver-side probe); either way the overlap equi-join on loc,
-    ONE global row_number + avg window, and the k-ordered smoothing
-    window are shared (bounded by construction — a two-named-series
-    overlap, the ``roll_corr`` precedent)."""
+    Both branches live in one lazy plan (``parallel.by_length``: a
+    per-length filter + union; no driver-side probe); either way the
+    overlap equi-join on loc, ONE global row_number + avg window, and
+    the k-ordered smoothing window are shared (bounded by construction
+    — a two-named-series overlap, the ``roll_corr`` precedent)."""
     if smooth < 0:
         raise ValueError(f"smooth must be >= 0, got {smooth}")
-    if method not in ("auto", "explode", "fft"):
-        raise ValueError(f"method must be auto|explode|fft, got {method}")
     v = F.col(value_col)
     pts = df.where(v.isNotNull())
     a = pts.where(F.col(key_col) == key_a).select(
@@ -392,14 +381,10 @@ def coherence(
         .withColumn("_t", F.row_number().over(ws) - 1)
         .where(F.col("_n") >= 2)
     )
-    if method == "explode":
-        spec = _coherence_explode(base)
-    elif method == "fft":
-        spec = _coherence_fft(base)
-    else:
-        spec = _coherence_explode(
-            base.where(F.col("_n") <= fft_threshold)
-        ).unionByName(_coherence_fft(base.where(F.col("_n") > fft_threshold)))
+    spec = by_length(
+        base, "_n", COHERENCE_EXPLODE_MAX_N, method,
+        _coherence_explode, _coherence_fft, ("explode", "fft"),
+    )
     wd = Window.orderBy("k").rowsBetween(-smooth, smooth)
     sm = spec.select(
         "k",
@@ -612,7 +597,6 @@ def white_noise_test(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Bartlett's cumulative-periodogram white-noise test → one row per
     key: (key, m, ks_stat, crit_05, crit_01, white_noise_05). The
@@ -628,9 +612,7 @@ def white_noise_test(
     Plan: rides :func:`periodogram`'s one-explode/one-groupBy plan, then
     two key-partitioned windows (total + running sum) and one final
     combinable groupBy(key) — no joins, all JVM either route."""
-    per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
-    )
+    per = _periodogram_with_n(df, key_col, loc_col, value_col, method)
     wk = Window.partitionBy(key_col)
     wcum = (
         Window.partitionBy(key_col)
@@ -667,7 +649,6 @@ def spectral_flatness(
     loc_col: str = "loc",
     value_col: str = "value",
     method: str = "auto",
-    fft_threshold: int = _FFT_THRESHOLD,
 ) -> DataFrame:
     """Wiener spectral flatness per key → (key, m, flatness): geometric
     mean / arithmetic mean of the periodogram ordinates — 1 for a flat
@@ -680,9 +661,7 @@ def spectral_flatness(
 
     Plan: rides :func:`periodogram`'s plan + one combinable
     groupBy(key). All JVM either route."""
-    per = _periodogram_with_n(
-        df, key_col, loc_col, value_col, method, fft_threshold
-    )
+    per = _periodogram_with_n(df, key_col, loc_col, value_col, method)
     n_zero = F.sum(F.when(F.col("power") <= 0, 1).otherwise(0))
     gm = F.exp(F.avg(F.when(F.col("power") > 0, F.log("power"))))
     return per.groupBy(F.col(key_col).alias("key")).agg(

@@ -28,11 +28,22 @@ mapInPandas stages whose per-row cost, not byte volume, is the bill.
 
 Neither changes values: grouped-map kernels receive each group WHOLE
 either way and sort internally, and row-parallel stages are row-local.
+
+``by_length`` is the one per-length router of the dual-plan operators
+(Theil–Sen, Mann–Kendall, the periodogram family, coherence, sample
+entropy, Kendall τ, the EMA family): ONE lazy plan in which groups of
+length ≤ the operator's bound take the short (SQL-oracle-replayable)
+branch and longer ones the long (in-core kernel) branch, unioned — no
+driver-side probe. Each bound is a module constant of its operator
+(the EMA family derives its bound from α), read when the plan is built.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def kernel_parallelism(df: DataFrame) -> int:
@@ -43,8 +54,6 @@ def kernel_parallelism(df: DataFrame) -> int:
 def spread_kernel(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition by the grouping key(s) with an explicit, cores-scaled
     partition count so a downstream grouped-map kernel runs parallel."""
-    from pyspark.sql import functions as F
-
     return df.repartition(
         kernel_parallelism(df), *[F.col(c) for c in key_cols]
     )
@@ -54,3 +63,33 @@ def spread_rows(df: DataFrame) -> DataFrame:
     """Round-robin repartition with an explicit, cores-scaled count for
     row-parallel kernel stages (broadcast scoring, mapInPandas decode)."""
     return df.repartition(kernel_parallelism(df))
+
+
+def by_length(
+    df: DataFrame,
+    n: str,
+    bound: int,
+    method: str,
+    short: Callable[[DataFrame], DataFrame],
+    long: Callable[[DataFrame], DataFrame],
+    names: tuple[str, str],
+) -> DataFrame:
+    """Route ``df`` between two plans of the same result by its per-group
+    length column ``n``.
+
+    ``names`` are the method names of (``short``, ``long``). A forced
+    ``method`` runs its branch over all of ``df``; ``"auto"`` runs
+    ``short`` on the rows with ``n <= bound`` and ``long`` on the rest and
+    unions the two by name. The branches drop ``n`` themselves if their
+    output must not carry it."""
+    if method not in ("auto", *names):
+        raise ValueError(
+            f"method must be {'|'.join(('auto', *names))}, got {method}"
+        )
+    if method == names[0]:
+        return short(df)
+    if method == names[1]:
+        return long(df)
+    return short(df.where(F.col(n) <= bound)).unionByName(
+        long(df.where(F.col(n) > bound))
+    )

@@ -514,7 +514,7 @@ def test_periodogram_degenerate_series_emit_no_rows(spark):
     assert [(r.key, r.k) for r in dom] == [("two", 1)]
 
 
-def test_periodogram_fft_kernel_matches_explode(spark):
+def test_periodogram_fft_kernel_matches_explode(spark, monkeypatch):
     """The grouped-map FFT kernel computes the SAME ordinates as the
     SQL-exact explode plan: (a) contiguous series (rfft fast path, with a
     non-zero starting loc to pin the phase-shift invariance), (b) a series
@@ -548,9 +548,12 @@ def test_periodogram_fft_kernel_matches_explode(spark):
         fft["power"].to_numpy(), exp["power"].to_numpy(), rtol=1e-9, atol=1e-9
     )
 
-    # auto at the boundary: threshold 33 sends "a" (40 > 33) through the
+    # auto at the boundary: bound 33 sends "a" (40 > 33) through the
     # kernel and "b" (33 <= 33) through explode — same union result
-    auto = (periodogram(df, method="auto", fft_threshold=33)
+    from spark_timeseries_spark.operators import spectral
+
+    monkeypatch.setattr(spectral, "PERIODOGRAM_EXPLODE_MAX_N", 33)
+    auto = (periodogram(df, method="auto")
             .orderBy("key", "k").toPandas())
     np.testing.assert_allclose(
         auto["power"].to_numpy(), exp["power"].to_numpy(), rtol=1e-9, atol=1e-9
@@ -1979,7 +1982,7 @@ def test_window_join(spark):
         window_join(lt, rt, -1.0, 1.0, aggs=["median"])
 
 
-def test_mann_kendall_kernel_join_parity(spark):
+def test_mann_kendall_kernel_join_parity(spark, monkeypatch):
     """The merge-count kernel and the pairwise-join S stage agree exactly
     (S is integer), including ties and across the auto threshold; the
     seasonal variant agrees per (key, season); degenerate series (n<3,
@@ -2008,7 +2011,10 @@ def test_mann_kendall_kernel_join_parity(spark):
 
     j = snap(mann_kendall(df, s_method="join"))
     k_ = snap(mann_kendall(df, s_method="kernel"))
-    auto = snap(mann_kendall(df, kernel_threshold=20))  # splits the keys
+    from spark_timeseries_spark.operators import cusum
+
+    monkeypatch.setattr(cusum, "MANN_KENDALL_JOIN_MAX_N", 20)
+    auto = snap(mann_kendall(df))  # splits the keys
     for key in j:
         assert j[key][:2] == k_[key][:2] == auto[key][:2], key
         for a, b in ((j[key], k_[key]), (j[key], auto[key])):
@@ -2021,12 +2027,13 @@ def test_mann_kendall_kernel_join_parity(spark):
 
     sj = snap(seasonal_mann_kendall(df, 4, s_method="join"))
     sk = snap(seasonal_mann_kendall(df, 4, s_method="kernel"))
-    sa = snap(seasonal_mann_kendall(df, 4, kernel_threshold=8))
+    monkeypatch.setattr(cusum, "MANN_KENDALL_JOIN_MAX_N", 8)
+    sa = snap(seasonal_mann_kendall(df, 4))
     for key in sj:
         assert sj[key][:2] == sk[key][:2] == sa[key][:2], key
 
 
-def test_theil_sen_kernel_join_parity(spark):
+def test_theil_sen_kernel_join_parity(spark, monkeypatch):
     """The in-core slope kernel and the pairwise-join plan agree on
     slope/intercept/n_pairs (same lerp median on both paths), including
     across the auto threshold; degenerate series stay NULL."""
@@ -2048,7 +2055,10 @@ def test_theil_sen_kernel_join_parity(spark):
 
     j = snap(theil_sen(df, method="join"))
     k_ = snap(theil_sen(df, method="kernel"))
-    auto = snap(theil_sen(df, kernel_threshold=12))
+    from spark_timeseries_spark.operators import cusum
+
+    monkeypatch.setattr(cusum, "THEIL_SEN_JOIN_MAX_N", 12)
+    auto = snap(theil_sen(df))
     for key in j:
         for x, y, z in zip(j[key], k_[key], auto[key]):
             if x is None:
@@ -2177,7 +2187,7 @@ def test_ohlc_bars(spark):
     assert out[("b", 1)].n == 1
 
 
-def test_sample_entropy_join_kernel_parity(spark):
+def test_sample_entropy_join_kernel_parity(spark, monkeypatch):
     """SampEn join and kernel plans agree exactly on (b, a) counts and
     match a brute-force numpy replay; regular series scores lower than
     noise; degenerate series NULL."""
@@ -2211,8 +2221,10 @@ def test_sample_entropy_join_kernel_parity(spark):
 
     j = {r.key: r for r in sample_entropy(df, method="join").collect()}
     k = {r.key: r for r in sample_entropy(df, method="kernel").collect()}
-    auto = {r.key: r for r in
-            sample_entropy(df, kernel_threshold=35).collect()}
+    from spark_timeseries_spark.operators import features
+
+    monkeypatch.setattr(features, "SAMPLE_ENTROPY_JOIN_MAX_N", 35)
+    auto = {r.key: r for r in sample_entropy(df).collect()}
     for key, vals in (("reg", regular), ("noise", noise)):
         eb, ea = brute(vals)
         for out in (j, k, auto):
@@ -2689,7 +2701,7 @@ def test_coherence(spark):
     assert all(v is None or abs(v - 1.0) < 1e-9 for v in s.values())
 
 
-def test_coherence_fft_kernel_parity(spark):
+def test_coherence_fft_kernel_parity(spark, monkeypatch):
     """The long-overlap rfft kernel and the SQL-exact explode branch
     produce the same spectra/coherence/phase at the threshold boundary
     (auto routes by overlap length; forcing either method agrees to
@@ -2720,8 +2732,11 @@ def test_coherence_fft_kernel_parity(spark):
             if a is not None:
                 assert abs(a - b) < 1e-9 * max(1.0, abs(a)), (k, col, a, b)
 
-    # auto + tiny threshold routes to the kernel branch
-    au = coherence(df, "a", "b", smooth=2, fft_threshold=8)
+    # auto + tiny bound routes to the kernel branch
+    from spark_timeseries_spark.operators import spectral
+
+    monkeypatch.setattr(spectral, "COHERENCE_EXPLODE_MAX_N", 8)
+    au = coherence(df, "a", "b", smooth=2)
     p = au._jdf.queryExecution().executedPlan().toString()
     assert "InPandas" in p
     got = {r.k: r.coh for r in au.collect()}
@@ -3382,7 +3397,7 @@ def test_spearman_kendall(spark):
     assert kendall_tau(df3, "a", "b").collect()[0].tau is None
 
 
-def test_kendall_dual_plan_parity(spark):
+def test_kendall_dual_plan_parity(spark, monkeypatch):
     """The merge-sort inversion kernel and the pair-join plan produce
     IDENTICAL integer counters and tau at the auto-routing threshold
     boundary (n <= threshold -> join, n > threshold -> kernel), on
@@ -3419,10 +3434,14 @@ def test_kendall_dual_plan_parity(spark):
     )
     assert abs(jo.tau - me.tau) < 1e-12
 
-    # auto routing at the exact boundary: threshold = n stays on the
-    # join plan, threshold = n - 1 routes to the kernel — same row
-    at_thr = kendall_tau(df, "a", "b", pair_threshold=n).collect()[0]
-    over_thr = kendall_tau(df, "a", "b", pair_threshold=n - 1).collect()[0]
+    # auto routing at the exact boundary: bound = n stays on the join
+    # plan, bound = n - 1 routes to the kernel — same row
+    from spark_timeseries_spark.operators import rankcorr
+
+    monkeypatch.setattr(rankcorr, "KENDALL_JOIN_MAX_N", n)
+    at_thr = kendall_tau(df, "a", "b").collect()[0]
+    monkeypatch.setattr(rankcorr, "KENDALL_JOIN_MAX_N", n - 1)
+    over_thr = kendall_tau(df, "a", "b").collect()[0]
     for r in (at_thr, over_thr):
         assert (r.n, r.n_concordant, r.n_discordant) == (
             jo.n, jo.n_concordant, jo.n_discordant
@@ -3437,8 +3456,6 @@ def test_kendall_dual_plan_parity(spark):
 
     with pytest.raises(ValueError):
         kendall_tau(df, "a", "b", method="bogus")
-    with pytest.raises(ValueError):
-        kendall_tau(df, "a", "b", pair_threshold=0)
 
 
 def test_information_coefficient_turnover(spark):

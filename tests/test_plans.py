@@ -906,19 +906,6 @@ def test_retention_no_entity_broadcast(spark):
     assert "BroadcastExchange" not in p, p
 
 
-def test_ema_max_len_hint_skips_routing(spark, grid):
-    """auto + a max_len hint inside the closed-form envelope plans the
-    closed form directly: no grouped-map branch, no union, and one
-    fewer window pass than unhinted auto."""
-    from spark_timeseries_spark.operators.indicators import ema
-
-    hinted = _plan(ema(grid, 0.3, max_len=31))
-    assert "InPandas" not in hinted and "Union" not in hinted, hinted
-    unhinted = _plan(ema(grid, 0.3))
-    assert "Union" in unhinted  # routing keeps both branches
-    assert hinted.count("Window") < unhinted.count("Window")
-
-
 def test_twa_one_exchange(spark):
     """twa's lead window partitions on the same (key, bucket) the
     aggregate groups by — one exchange, no join, no Python."""
